@@ -5,8 +5,11 @@ import java.util.OptionalLong
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import graft.core.LogLine
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -56,34 +59,24 @@ class BoomDataSource extends TableProvider with DataSourceRegister {
 }
 
 object BoomDataSource {
-  /** DataFrameReader/Writer stash paths under "path" or a JSON "paths" array. */
-  def extractPaths(properties: java.util.Map[String, String]): Seq[String] = {
-    val out = ArrayBuffer[String]()
-    Option(properties.get("paths")).foreach { json =>
-      // Minimal JSON string-array parse: ["a","b"] with \-escapes.
-      val s = json.trim.stripPrefix("[").stripSuffix("]")
-      var i = 0
-      val sb = new StringBuilder
-      var inStr = false
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inStr) {
-          if (c == '\\' && i + 1 < s.length) { sb.append(s.charAt(i + 1)); i += 1 }
-          else if (c == '"') { out += sb.toString; sb.clear(); inStr = false }
-          else sb.append(c)
-        } else if (c == '"') inStr = true
-        i += 1
-      }
-    }
-    Option(properties.get("path")).foreach(out += _)
-    out.toSeq
-  }
-
-  /** Expand input paths to concrete data files, skipping `_*`, `.*`, `*.tmp`
-    * (reference: fs/FileManager.java:42-51).
+  /** The JSON codec of the "paths" option — Spark's DataFrameReader writes
+    * it with a Jackson `ObjectMapper` — and of [[BoomOffset]].
     */
-  def listFiles(spark: SparkSession, paths: Seq[String]): Seq[FileStatus] = {
-    val hconf = spark.sessionState.newHadoopConf()
+  private[boom] val json = new ObjectMapper()
+
+  /** DataFrameReader/Writer stash paths under "path" or a JSON "paths" array. */
+  def extractPaths(properties: java.util.Map[String, String]): Seq[String] =
+    Option(properties.get("paths")).toSeq
+      .flatMap(p => json.readValue(p, classOf[Array[String]]).toSeq) ++
+      Option(properties.get("path"))
+
+  /** Expand input paths (globs allowed) to the concrete data files a Boom
+    * read ingests — THE entry rule, shared by the scan, the streaming
+    * source, the catalog and maintenance: recurse into directories, skip
+    * `_*`, `.*`, `*.tmp` (reference: fs/FileManager.java:42-51) and empty
+    * files.
+    */
+  def listFiles(conf: Configuration, paths: Seq[String]): Seq[FileStatus] = {
     val out = ArrayBuffer[FileStatus]()
     def keep(p: Path): Boolean = {
       val n = p.getName
@@ -98,7 +91,7 @@ object BoomDataSource {
     }
     paths.foreach { p =>
       val path = new Path(p)
-      val fs = path.getFileSystem(hconf)
+      val fs = path.getFileSystem(conf)
       val matches = Option(fs.globStatus(path)).getOrElse(Array.empty)
       matches.foreach(s => if (keep(s.getPath)) walk(s, fs))
     }
@@ -142,16 +135,16 @@ class BoomTable(paths: Seq[String]) extends Table with SupportsRead with Support
   * residual-everything policy forfeits: `message` can be PRUNED while
   * pushed clauses still filter (no string copy per surviving line), and
   * Spark's aggregate pushdown rule fires (it requires no post-scan
-  * Filter), enabling the COUNT(*) fast path below. Unparsed predicates
+  * Filter), enabling the aggregate fast path below. Unparsed predicates
   * stay residual as before.
   *
-  * COUNT(*) pushdown (`SupportsPushDownAggregates`): a global, ungrouped
-  * COUNT(*) under time-only predicates (the reference's A4 "result count"
-  * counter, IndexLogs-style totals) becomes a header-walk scan — per-line
-  * varint/length skips, no BoomLine, no message bytes, ONE row per task —
-  * with Spark summing the per-partition partials. Gated off when term
-  * clauses are pushed (a term test must decode messages anyway) and by the
-  * `countPushdown=false` read option (the apples-to-apples bench switch).
+  * Aggregate pushdown (`SupportsPushDownAggregates`): a global, ungrouped
+  * COUNT(*) / MIN(timestamp) / MAX(timestamp) under time-only predicates
+  * (the reference's A4 "result count" counter, IndexLogs-style totals)
+  * becomes a header-walk scan — per-line varint/length skips, no BoomLine,
+  * no message bytes, ONE row per task — with Spark merging the
+  * per-partition partials. Gated off when term clauses are pushed (a term
+  * test must decode messages anyway).
   */
 class BoomScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownV2Filters
@@ -266,18 +259,15 @@ class BoomScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
   private var aggsPushed: Seq[String] = Nil
 
   /** Global (ungrouped) COUNT(*) / MIN(timestamp) / MAX(timestamp), in
-    * any combination, under time-only predicates. COUNT alone keeps the
-    * zero-ms-read header-credit walk; any MIN/MAX switches the task to
-    * the stats walk (per-line `ms` varint, still no message decode, ONE
-    * row per task; Spark merges the partials with sum/min/max). Gated
-    * off when term clauses are pushed — a term test must decode
-    * messages — and by the `countPushdown=false` read option (the
-    * apples-to-apples bench switch, shared by all pushed aggregates).
+    * any combination, under time-only predicates. COUNT alone credits
+    * wholly-in-range blocks from their array headers with no `ms` read;
+    * any MIN/MAX also reads each line's `ms` varint (still no message
+    * decode, ONE row per task; Spark merges the partials with
+    * sum/min/max). Gated off when term clauses are pushed — a term test
+    * must decode messages.
     */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    val enabled = options.getBoolean("countPushdown", true)
-    if (!enabled || clauses.nonEmpty) return false
-    if (aggregation.groupByExpressions().nonEmpty) return false
+    if (clauses.nonEmpty || aggregation.groupByExpressions().nonEmpty) return false
     val parsed = aggregation.aggregateExpressions().map {
       case _: CountStar => "count"
       case m: Min if isCol(m.column, "timestamp") => "min"
@@ -291,7 +281,8 @@ class BoomScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
 
   override def build(): Scan = {
     val spark = SparkSession.active
-    val files = BoomDataSource.listFiles(spark, paths)
+    val hconf = spark.sessionState.newHadoopConf()
+    val files = BoomDataSource.listFiles(hconf, paths)
     val pushdown = BoomPushdown(
       minTs = minTs,
       maxTsExcl = maxTsExcl,
@@ -299,15 +290,21 @@ class BoomScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
       needMessage = aggsPushed.isEmpty &&
         requiredSchema.fieldNames.contains("message"))
     new BoomScan(paths, files, requiredSchema, pushdown, options,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
-      pushedAggs = aggsPushed)
+      new SerializableConfiguration(hconf), pushedAggs = aggsPushed)
   }
 }
 
 /** One byte-range slice of a Boom file, bounded by Avro sync markers at read
   * time (length = Long.MaxValue means "to end of file").
   */
-case class BoomFileSlice(path: String, start: Long, length: Long)
+case class BoomFileSlice(path: String, start: Long, length: Long) {
+  def open(pushdown: BoomPushdown, hconf: SerializableConfiguration): BoomFileRangeIterator = {
+    val end = if (length == Long.MaxValue) Long.MaxValue else start + length
+    new BoomFileRangeIterator(
+      new org.apache.avro.mapred.FsInput(new Path(path), hconf.value),
+      pushdown, start, end, path)
+  }
+}
 
 /** A bin-packed group of file slices read by one task. */
 case class BoomInputPartition(slices: Array[BoomFileSlice], totalBytes: Long) extends InputPartition
@@ -396,13 +393,7 @@ class BoomScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    if (pushedAggs == Seq("count")) new BoomCountReaderFactory(pushdown, hconf)
-    else if (pushedAggs.nonEmpty)
-      new BoomAggReaderFactory(pushdown, pushedAggs, hconf)
-    else new BoomReaderFactory(requiredSchema, pushdown, hconf)
-
-  /** Public surface for plan assertions: is this a count-only scan? */
-  def isCountOnly: Boolean = pushedAggs == Seq("count")
+    new BoomReaderFactory(requiredSchema, pushdown, hconf, pushedAggs)
 
   /** Public surface for plan assertions: which aggregates were pushed? */
   def aggsPushed: Seq[String] = pushedAggs
@@ -416,32 +407,30 @@ class BoomScan(
   }
 }
 
+/** Row reader per partition, or — when aggregates were pushed — one
+  * partial-aggregate row per partition.
+  */
 class BoomReaderFactory(
     requiredSchema: StructType,
     pushdown: BoomPushdown,
-    hconf: SerializableConfiguration) extends PartitionReaderFactory {
+    hconf: SerializableConfiguration,
+    aggs: Seq[String] = Nil) extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new BoomPartitionReader(
-      partition.asInstanceOf[BoomInputPartition], requiredSchema, pushdown, hconf)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[BoomInputPartition]
+    if (aggs.nonEmpty) new BoomAggPartitionReader(p, pushdown, aggs, hconf)
+    else new BoomPartitionReader(p, requiredSchema, pushdown, hconf)
+  }
 }
 
-class BoomAggReaderFactory(
-    pushdown: BoomPushdown,
-    aggs: Seq[String],
-    hconf: SerializableConfiguration) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new BoomAggPartitionReader(
-      partition.asInstanceOf[BoomInputPartition], pushdown, aggs, hconf)
-}
-
-/** Pushed MIN/MAX(timestamp) ± COUNT(*) task: drain each slice in
-  * aggregate mode ([[BoomFileRangeIterator.statsRemaining]] — per-line
-  * `ms` varints, zero row/message materialization) and emit ONE partial
-  * row in the pushed-aggregate order; Spark's final aggregation merges the
-  * partials (sum / min / max). MIN/MAX are null when the task saw no
-  * surviving line — Spark's Min/Max ignore null partials.
+/** Pushed-aggregate task (COUNT(*), MIN/MAX(timestamp), any combination):
+  * drain each slice in aggregate mode
+  * ([[BoomFileRangeIterator.statsRemaining]] — header/varint walks, zero
+  * row or message materialization) and emit ONE partial row in the
+  * pushed-aggregate order; Spark's final aggregation merges the partials
+  * (sum / min / max). The distributed form of the reference's A4 result
+  * counter. MIN/MAX are null when the task saw no surviving line —
+  * Spark's Min/Max ignore null partials.
   */
 class BoomAggPartitionReader(
     partition: BoomInputPartition,
@@ -454,12 +443,9 @@ class BoomAggPartitionReader(
 
   override def next(): Boolean = {
     if (emitted) return false
-    val stats = new BoomAggStats
+    val stats = new BoomAggStats(extremes = aggs.exists(_ != "count"))
     partition.slices.foreach { slice =>
-      val end = if (slice.length == Long.MaxValue) Long.MaxValue else slice.start + slice.length
-      val it = new BoomFileRangeIterator(
-        new org.apache.avro.mapred.FsInput(new Path(slice.path), hconf.value),
-        pushdown, slice.start, end)
+      val it = slice.open(pushdown, hconf)
       try it.statsRemaining(stats) finally it.close()
     }
     val r = new GenericInternalRow(aggs.length)
@@ -472,51 +458,6 @@ class BoomAggPartitionReader(
           if (stats.cnt == 0L) r.setNullAt(i) else r.setLong(i, stats.maxTs)
       }
     }
-    row = r
-    emitted = true
-    true
-  }
-
-  override def get(): InternalRow = row
-
-  override def close(): Unit = ()
-}
-
-class BoomCountReaderFactory(
-    pushdown: BoomPushdown,
-    hconf: SerializableConfiguration) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new BoomCountPartitionReader(
-      partition.asInstanceOf[BoomInputPartition], pushdown, hconf)
-}
-
-/** Pushed COUNT(*) task: drain each slice in count mode
-  * ([[BoomFileRangeIterator.countRemaining]] — header/varint walks, zero
-  * row materialization) and emit ONE partial-count row; Spark's final
-  * aggregation sums the partials. The distributed form of the reference's
-  * A4 result counter.
-  */
-class BoomCountPartitionReader(
-    partition: BoomInputPartition,
-    pushdown: BoomPushdown,
-    hconf: SerializableConfiguration) extends PartitionReader[InternalRow] {
-
-  private var emitted = false
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (emitted) return false
-    var total = 0L
-    partition.slices.foreach { slice =>
-      val end = if (slice.length == Long.MaxValue) Long.MaxValue else slice.start + slice.length
-      val it = new BoomFileRangeIterator(
-        new org.apache.avro.mapred.FsInput(new Path(slice.path), hconf.value),
-        pushdown, slice.start, end)
-      try total += it.countRemaining() finally it.close()
-    }
-    val r = new GenericInternalRow(1)
-    r.setLong(0, total)
     row = r
     emitted = true
     true
@@ -557,12 +498,8 @@ class BoomPartitionReader(
       }
       if (current != null) { current.close(); current = null }
       if (sliceIdx >= partition.slices.length) return false
-      val slice = partition.slices(sliceIdx)
+      current = partition.slices(sliceIdx).open(pushdown, hconf)
       sliceIdx += 1
-      val end = if (slice.length == Long.MaxValue) Long.MaxValue else slice.start + slice.length
-      current = new BoomFileRangeIterator(
-        new org.apache.avro.mapred.FsInput(new Path(slice.path), hconf.value),
-        pushdown, slice.start, end)
     }
     false
   }

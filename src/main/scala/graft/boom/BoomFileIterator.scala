@@ -1,6 +1,6 @@
 package graft.boom
 
-import java.io.{EOFException, InputStream}
+import java.io.InputStream
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -43,6 +43,17 @@ final case class BoomTerm(term: UTF8String, onUpper: Boolean) extends Serializab
   }
 }
 
+/** Mutable per-task accumulator for the pushed-aggregate walk: exact
+  * surviving-line count and min/max timestamps (epoch ms). `minTs`/`maxTs`
+  * are meaningful only when `cnt > 0` and `extremes` (MIN or MAX was
+  * pushed): a COUNT-only walk credits whole blocks without reading `ms`.
+  */
+final class BoomAggStats(val extremes: Boolean) {
+  var cnt: Long = 0L
+  var minTs: Long = Long.MaxValue
+  var maxTs: Long = Long.MinValue
+}
+
 /** Scan-time pushdown state for a Boom read.
   *
   * @param minTs      inclusive lower bound on line timestamp (epoch ms)
@@ -53,16 +64,6 @@ final case class BoomTerm(term: UTF8String, onUpper: Boolean) extends Serializab
   *                   clauses of one term — util/MultiSearch.java:165-198)
   * @param needMessage whether the message column must be decoded
   */
-/** Mutable per-task accumulator for the pushed-aggregate walk: exact
-  * surviving-line count and min/max timestamps (epoch ms). `minTs`/`maxTs`
-  * are meaningful only when `cnt > 0`.
-  */
-final class BoomAggStats {
-  var cnt: Long = 0L
-  var minTs: Long = Long.MaxValue
-  var maxTs: Long = Long.MinValue
-}
-
 final case class BoomPushdown(
     minTs: Long = Long.MinValue,
     maxTsExcl: Long = Long.MaxValue,
@@ -253,60 +254,22 @@ final class BoomBlockDatumReader(pushdown: BoomPushdown)
     }
   }
 
-  /** Count-only decode of one logBlock record: the number of lines whose
-    * timestamp falls in the pushed range, WITHOUT materializing a single
-    * BoomLine or message string (the A4 count-under-time-range fast path —
-    * the reference burned a full scan-and-spool job on it). Three regimes
-    * per block, decided by the block `second`:
+  /** Aggregate decode of one logBlock record for pushed COUNT(*) and
+    * MIN/MAX(timestamp): folds the lines whose timestamp falls in the pushed
+    * range into `stats` WITHOUT materializing a single BoomLine or message
+    * string (the A4 count-under-time-range fast path — the reference burned
+    * a full scan-and-spool job on it). Three regimes per block, decided by
+    * the block `second`:
     *
-    *   - wholly inside the range → the array ITEM COUNTS are the answer:
-    *     items are skipped (varint/length walks, no copies) and every
-    *     array-block count is credited;
-    *   - wholly outside → [[skipLines]];
-    *   - boundary second → per-line `ms` test, everything else skipped.
+    *   - wholly outside the range → [[skipLines]];
+    *   - boundary second → per-line `ms` test, everything else skipped;
+    *   - wholly inside → every line counts. COUNT alone credits the array
+    *     ITEM COUNTS (items skipped, no `ms` read); MIN/MAX read each
+    *     line's `ms` varint, the price of EXACT extremes (a whole-second
+    *     block bounds its lines' timestamps only to [base, base+999]).
     *
     * Only valid when no term clauses are pushed (the scan builder gates
-    * count pushdown on exactly that).
-    */
-  def countLines(in: Decoder): Long = {
-    var second = 0L
-    var cnt = 0L
-    val fields = writerSchema.getFields
-    val nFields = fields.size()
-    var f = 0
-    while (f < nFields) {
-      val field = fields.get(f)
-      field.name() match {
-        case "second" => second = in.readLong()
-        case "logLines" =>
-          val base = second * 1000L
-          // second <= 0 blocks may carry reference-written ms in
-          // [-999, 999] (truncating Java % — see read()) → coverage
-          // widens to [base-999, base+999] for both fast regimes.
-          val coverLo = if (second <= 0L) base - 999L else base
-          val itemSchema = field.schema().getElementType
-          if (!pushdown.hasTimeFilter ||
-            (coverLo >= pushdown.minTs && base + 999L < pushdown.maxTsExcl)) {
-            cnt += countAllLines(in, itemSchema)
-          } else if (base + 999L < pushdown.minTs || coverLo >= pushdown.maxTsExcl) {
-            skipLines(in, itemSchema)
-          } else {
-            cnt += countLinesInRange(in, itemSchema, base)
-          }
-        case _ => skipByType(in, field.schema())
-      }
-      f += 1
-    }
-    cnt
-  }
-
-  /** Aggregate walk for pushed MIN/MAX(timestamp) (± COUNT): like
-    * [[countLines]] but reads each surviving line's `ms` varint (all
-    * other item fields still length-skipped, messages never decoded) and
-    * folds exact per-line timestamps into `stats`. The count-only path
-    * keeps its zero-ms-read header credit; this one pays one varint per
-    * in-range line — the price of EXACT extremes (a whole-second block
-    * bounds its lines' timestamps only to [base, base+999]).
+    * aggregate pushdown on exactly that).
     */
   def statLines(in: Decoder, stats: BoomAggStats): Unit = {
     var second = 0L
@@ -319,7 +282,9 @@ final class BoomBlockDatumReader(pushdown: BoomPushdown)
         case "second" => second = in.readLong()
         case "logLines" =>
           val base = second * 1000L
-          // Same second <= 0 coverage widening as countLines.
+          // second <= 0 blocks may carry reference-written ms in
+          // [-999, 999] (truncating Java % — see read()) → coverage
+          // widens to [base-999, base+999] for every regime.
           val coverLo = if (second <= 0L) base - 999L else base
           val itemSchema = field.schema().getElementType
           if (base + 999L < pushdown.minTs || coverLo >= pushdown.maxTsExcl) {
@@ -335,11 +300,15 @@ final class BoomBlockDatumReader(pushdown: BoomPushdown)
     }
   }
 
+  /** `readArrayStart`/`arrayNext` (not `skipArray`) so byte-sized array
+    * blocks from foreign writers still report their item counts.
+    */
   private def statLinesInBlock(
       in: Decoder, itemSchema: Schema, base: Long, boundary: Boolean,
       stats: BoomAggStats): Unit = {
     val itemFields = itemSchema.getFields
     val nItemFields = itemFields.size()
+    val readMs = boundary || stats.extremes
     var n = in.readArrayStart()
     while (n != 0) {
       var i = 0L
@@ -348,68 +317,21 @@ final class BoomBlockDatumReader(pushdown: BoomPushdown)
         var f = 0
         while (f < nItemFields) {
           val fld = itemFields.get(f)
-          if (fld.name() == "ms") ms = in.readLong()
+          if (readMs && fld.name() == "ms") ms = in.readLong()
           else skipByType(in, fld.schema())
           f += 1
         }
         val ts = base + ms
-        if (!boundary || (ts >= pushdown.minTs && ts < pushdown.maxTsExcl)) {
+        if (readMs && (!boundary || (ts >= pushdown.minTs && ts < pushdown.maxTsExcl))) {
           stats.cnt += 1
           if (ts < stats.minTs) stats.minTs = ts
           if (ts > stats.maxTs) stats.maxTs = ts
         }
         i += 1
       }
+      if (!readMs) stats.cnt += n
       n = in.arrayNext()
     }
-  }
-
-  /** Item counts from the array headers; items skipped, never decoded.
-    * `readArrayStart`/`arrayNext` (not `skipArray`) so byte-sized array
-    * blocks from foreign writers still report their counts.
-    */
-  private def countAllLines(in: Decoder, itemSchema: Schema): Long = {
-    val itemFields = itemSchema.getFields
-    val nItemFields = itemFields.size()
-    var total = 0L
-    var n = in.readArrayStart()
-    while (n != 0) {
-      var i = 0L
-      while (i < n) {
-        var f = 0
-        while (f < nItemFields) { skipByType(in, itemFields.get(f).schema()); f += 1 }
-        i += 1
-      }
-      total += n
-      n = in.arrayNext()
-    }
-    total
-  }
-
-  /** Boundary-second block: only `ms` is read; all else skipped. */
-  private def countLinesInRange(in: Decoder, itemSchema: Schema, base: Long): Long = {
-    val itemFields = itemSchema.getFields
-    val nItemFields = itemFields.size()
-    var cnt = 0L
-    var n = in.readArrayStart()
-    while (n != 0) {
-      var i = 0L
-      while (i < n) {
-        var ms = 0L
-        var f = 0
-        while (f < nItemFields) {
-          val fld = itemFields.get(f)
-          if (fld.name() == "ms") ms = in.readLong()
-          else skipByType(in, fld.schema())
-          f += 1
-        }
-        val ts = base + ms
-        if (ts >= pushdown.minTs && ts < pushdown.maxTsExcl) cnt += 1
-        i += 1
-      }
-      n = in.arrayNext()
-    }
-    cnt
   }
 
   private def skipLines(in: Decoder, itemSchema: Schema): Unit = {
@@ -492,12 +414,17 @@ final class BoomFileIterator(input: InputStream, pushdown: BoomPushdown)
   * Deflate (the reference's only codec, boom/BoomWriter.java) and null
   * codecs are supported; the `Inflater` and block buffers are reused across
   * blocks.
+  *
+  * Malformed input never yields short output: every length read from the
+  * file is checked against what remains of it, and a corrupt frame fails
+  * with an `IOException` naming `file` and the byte offset.
   */
 final class BoomFileRangeIterator(
     in: org.apache.avro.file.SeekableInput,
     pushdown: BoomPushdown,
     start: Long,
-    end: Long)
+    end: Long,
+    file: String = "<boom input>")
     extends Iterator[BoomLine] with AutoCloseable {
 
   private val SyncSize = 16
@@ -535,17 +462,32 @@ final class BoomFileRangeIterator(
 
   /** Avro zigzag varint. */
   private def readVarLong(): Long = {
+    val at = pos
     var b = readByte()
-    if (b < 0) throw new EOFException("EOF in varint")
+    if (b < 0) throw corrupt("EOF in varint", at)
     var acc = (b & 0x7FL)
     var shift = 7
     while ((b & 0x80) != 0) {
       b = readByte()
-      if (b < 0) throw new EOFException("EOF in varint")
+      if (b < 0) throw corrupt("EOF in varint", at)
       acc |= (b & 0x7FL) << shift
       shift += 7
     }
     (acc >>> 1) ^ -(acc & 1L)
+  }
+
+  private def corrupt(what: String, at: Long): java.io.IOException =
+    new java.io.IOException(s"Corrupt boom file $file: $what at byte $at")
+
+  /** A varint count or length read at the current position, rejected when
+    * negative or above `limit` (for lengths: the bytes left in the file).
+    */
+  private def readLength(what: String, limit: Long): Int = {
+    val at = pos
+    val v = readVarLong()
+    val max = math.min(limit, Int.MaxValue)
+    if (v < 0 || v > max) throw corrupt(s"$what $v outside [0, $max]", at)
+    v.toInt
   }
 
   // ---- header ----
@@ -558,7 +500,7 @@ final class BoomFileRangeIterator(
     val magic = new Array[Byte](4)
     if (!readFully(magic, 0, 4) || magic(0) != 'O' || magic(1) != 'b' ||
       magic(2) != 'j' || magic(3) != 1) {
-      throw new java.io.IOException("Not an Avro object container file")
+      throw new java.io.IOException(s"Not an Avro object container file: $file")
     }
     var schemaJson: String = null
     var n = readVarLong()
@@ -578,9 +520,10 @@ final class BoomFileRangeIterator(
       n = readVarLong()
     }
     sync = new Array[Byte](SyncSize)
-    if (!readFully(sync, 0, SyncSize)) throw new EOFException("EOF in header sync")
+    val headerSyncAt = pos
+    if (!readFully(sync, 0, SyncSize)) throw corrupt("EOF in header sync", headerSyncAt)
     headerEnd = pos
-    if (schemaJson == null) throw new java.io.IOException("Boom file missing avro.schema")
+    if (schemaJson == null) throw new java.io.IOException(s"Boom file missing avro.schema: $file")
     datumReader.setSchema(new Schema.Parser().parse(schemaJson))
     if (codec != "null" && codec != "deflate") {
       throw new UnsupportedOperationException(s"Unsupported boom codec: $codec")
@@ -591,9 +534,9 @@ final class BoomFileRangeIterator(
     new String(readBytesArr(), java.nio.charset.StandardCharsets.UTF_8)
 
   private def readBytesArr(): Array[Byte] = {
-    val len = readVarLong().toInt
+    val len = readLength("header length", fileLen - pos)
     val b = new Array[Byte](len)
-    if (!readFully(b, 0, len)) throw new EOFException("EOF in header bytes")
+    if (!readFully(b, 0, len)) throw corrupt("EOF in header bytes", pos)
     b
   }
 
@@ -747,13 +690,18 @@ final class BoomFileRangeIterator(
   private def nextRawBlock(): Int = {
     // Ownership: the sync preceding the block at `pos` started at pos-16.
     if (pos - SyncSize >= end || pos >= fileLen) return -1
-    val count = try readVarLong().toInt catch { case _: EOFException => return -1 }
-    val size = readVarLong().toInt
+    // Bytes remain past the last sync, so EOF inside this frame is
+    // truncation, never a clean end.
+    val countAt = pos
+    val count = readLength("block count", Int.MaxValue)
+    val sizeAt = pos
+    val size = readLength("block size", fileLen - sizeAt)
     if (packed.length < size) packed = new Array[Byte](math.max(size, packed.length * 2))
-    if (!readFully(packed, 0, size)) throw new EOFException("EOF in block payload")
+    if (!readFully(packed, 0, size)) throw corrupt("EOF in block payload", sizeAt)
+    val syncAt = pos
     if (!readFully(syncCheck, 0, SyncSize) ||
       !java.util.Arrays.equals(syncCheck, sync)) {
-      throw new java.io.IOException(s"Corrupt boom block: bad sync at $pos")
+      throw corrupt("bad sync", syncAt)
     }
 
     var data = packed
@@ -768,13 +716,15 @@ final class BoomFileRangeIterator(
         }
         val n = inflater.inflate(inflated, outLen, inflated.length - outLen)
         if (n == 0 && inflater.needsInput()) {
-          throw new java.io.IOException("Truncated deflate block in boom file")
+          throw corrupt("truncated deflate block", sizeAt)
         }
         outLen += n
       }
       data = inflated
       len = outLen
     }
+    // Every logBlock record takes at least one byte (its `second`).
+    if (count > len) throw corrupt(s"block count $count exceeds its $len payload bytes", countAt)
     blockData = data
     blockLen = len
     count
@@ -798,43 +748,17 @@ final class BoomFileRangeIterator(
     true
   }
 
-  /** Drain the slice in COUNT mode: lines in the pushed time range, no
-    * BoomLine / message materialization anywhere
-    * ([[BoomBlockDatumReader.countLines]] per record). The backing store
-    * for pushed-down COUNT(*) — one long per slice instead of one row per
-    * line. Terminal: the iterator is `done` afterwards.
-    */
-  def countRemaining(): Long = {
-    require(pushdown.clauses.isEmpty,
-      "count-only scan requires no pushed term clauses")
-    require(bufPos >= buffer.length,
-      "countRemaining must run on a fresh iterator")
-    if (done) return 0L // slice owned no blocks
-    var total = 0L
-    var count = nextRawBlock()
-    while (count >= 0) {
-      blocksDecoded += 1
-      binDecoder = DecoderFactory.get().binaryDecoder(blockData, 0, blockLen, binDecoder)
-      var i = 0
-      while (i < count) { total += datumReader.countLines(binDecoder); i += 1 }
-      count = nextRawBlock()
-    }
-    done = true
-    total
-  }
-
-  /** Drain the slice in AGGREGATE mode (pushed MIN/MAX(timestamp) ±
-    * COUNT): per-line `ms` varints are read, everything else is skipped,
-    * no BoomLine/message ever materializes
-    * ([[BoomBlockDatumReader.statLines]] per record). Terminal, like
-    * [[countRemaining]].
+  /** Drain the slice in AGGREGATE mode (pushed COUNT(*) and
+    * MIN/MAX(timestamp)): no BoomLine/message ever materializes
+    * ([[BoomBlockDatumReader.statLines]] per record). Terminal: the
+    * iterator is `done` afterwards.
     */
   def statsRemaining(stats: BoomAggStats): Unit = {
     require(pushdown.clauses.isEmpty,
       "aggregate-only scan requires no pushed term clauses")
     require(bufPos >= buffer.length,
       "statsRemaining must run on a fresh iterator")
-    if (done) return
+    if (done) return // slice owned no blocks
     var count = nextRawBlock()
     while (count >= 0) {
       blocksDecoded += 1
@@ -844,6 +768,15 @@ final class BoomFileRangeIterator(
       count = nextRawBlock()
     }
     done = true
+  }
+
+  /** Lines of the slice in the pushed time range: [[statsRemaining]] with
+    * COUNT alone pushed.
+    */
+  def countRemaining(): Long = {
+    val stats = new BoomAggStats(extremes = false)
+    statsRemaining(stats)
+    stats.cnt
   }
 
   override def hasNext: Boolean = {

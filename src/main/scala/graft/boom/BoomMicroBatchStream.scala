@@ -20,9 +20,7 @@ import org.apache.spark.util.SerializableConfiguration
   * JSON is the simple-and-correct form.
   */
 case class BoomOffset(files: Seq[String]) extends Offset {
-  override def json(): String =
-    files.sorted.map(f => "\"" + f.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
+  override def json(): String = BoomDataSource.json.writeValueAsString(files.sorted.toArray)
 }
 
 object BoomOffset {
@@ -64,7 +62,7 @@ class BoomMicroBatchStream(
   }
 
   private def currentFiles(): Seq[String] =
-    BoomDataSource.listFiles(spark, paths).map(_.getPath.toString).sorted
+    BoomDataSource.listFiles(hconf.value, paths).map(_.getPath.toString).sorted
 
   override def initialOffset(): Offset = BoomOffset(Seq.empty)
 

@@ -6,7 +6,8 @@ import java.time.{Instant, ZoneOffset}
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+
+import graft.boom.BoomDataSource
 
 /** Resolves the reference's HDFS directory "catalog" into concrete input
   * paths — partition pruning by directory name.
@@ -19,8 +20,9 @@ import org.apache.hadoop.fs.Path
   *
   * A `[start, end)` millisecond range expands to the hour directories it
   * covers (fs/FileManager.java:66-100), each globbed for the four readable
-  * lifecycle branches (FileManager.java:39-40, 103-123). `_*` and `*.tmp`
-  * entries are skipped by the boom reader itself.
+  * lifecycle branches (FileManager.java:39-40, 103-123) and expanded by
+  * [[graft.boom.BoomDataSource.listFiles]] — the one rule for which entries
+  * a Boom read ingests — so the catalog lists exactly what the scan reads.
   */
 object LogCatalog {
   private val dateFmt = DateTimeFormatter.ofPattern("yyyyMMdd").withZone(ZoneOffset.UTC)
@@ -52,52 +54,14 @@ object LogCatalog {
     out.toSeq
   }
 
-  /** Directory-glob patterns for one query, before existence checks. */
-  def globPatterns(
-      root: String,
-      dc: String,
-      service: String,
-      component: String,
-      startMs: Long,
-      endMs: Long): Seq[String] =
-    for {
-      (date, hour) <- hoursInRange(startMs, endMs)
-      branch <- Branches
-    } yield s"$root/service/$dc/$service/logs/$date/$hour/$component/$branch"
-
-  /** Concrete existing file paths for the query. */
-  def resolve(
-      conf: Configuration,
-      root: String,
-      dc: String,
-      service: String,
-      component: String,
-      startMs: Long,
-      endMs: Long): Seq[String] =
-    resolveByHour(conf, root, dc, service, component, startMs, endMs).flatten
-
-  /** Concrete existing file paths, grouped per hour partition in ascending
-    * hour order (empty hour groups dropped). The grouping is what makes the
-    * exchange-free ordered-concat read possible: hour buckets are
-    * time-disjoint by layout, so per-bucket sorted partitions concatenate
-    * into global order.
-    */
-  def resolveByHour(
-      conf: Configuration,
-      root: String,
-      dc: String,
-      service: String,
-      component: String,
-      startMs: Long,
-      endMs: Long): Seq[Seq[String]] =
-    resolveByHourWithSizes(conf, root, dc, service, component, startMs, endMs)
-      .map(_.map(_._1))
-
-  /** [[resolveByHour]] carrying each file's byte length (free — the same
-    * globStatus listing already returns it). The per-hour byte totals are
-    * what lets the ordered-concat reader route OVERSIZED hours to the
-    * range sort instead of a single-task sort
-    * ([[LogQuery.formattedByHour]]).
+  /** Concrete existing file paths with their byte lengths, grouped per
+    * hour partition in ascending hour order (empty hour groups dropped).
+    * The grouping is what makes the exchange-free ordered-concat read
+    * possible: hour buckets are time-disjoint by layout, so per-bucket
+    * sorted partitions concatenate into global order. The per-hour byte
+    * totals (free — the listing already returns them) let the
+    * ordered-concat reader route OVERSIZED hours to the range sort instead
+    * of a single-task sort ([[LogQuery.formattedByHour]]).
     */
   def resolveByHourWithSizes(
       conf: Configuration,
@@ -108,31 +72,9 @@ object LogCatalog {
       startMs: Long,
       endMs: Long): Seq[Seq[(String, Long)]] = {
     hoursInRange(startMs, endMs).map { case (date, hour) =>
-      val out = ArrayBuffer[(String, Long)]()
-      // Entry rules MUST match what the reader will actually ingest
-      // (BoomDataSource.listFiles: skip _*/.*/ *.tmp and empty files,
-      // recurse into directories) — a glob-matched SUBDIRECTORY counted at
-      // its directory length (~0) would let a multi-GB hour slip under
-      // maxHourBytes and defeat the oversized-hour sort routing, and
-      // dot-files would inflate byte totals the scan never reads.
-      def keep(n: String): Boolean =
-        !n.startsWith("_") && !n.startsWith(".") && !n.endsWith(".tmp")
-      def add(s: org.apache.hadoop.fs.FileStatus,
-          fs: org.apache.hadoop.fs.FileSystem): Unit = {
-        if (s.isDirectory) {
-          fs.listStatus(s.getPath).foreach(c =>
-            if (keep(c.getPath.getName)) add(c, fs))
-        } else if (s.getLen > 0) out += ((s.getPath.toString, s.getLen))
-      }
-      Branches.foreach { branch =>
-        val p = s"$root/service/$dc/$service/logs/$date/$hour/$component/$branch"
-        val path = new Path(p)
-        val fs = path.getFileSystem(conf)
-        Option(fs.globStatus(path)).getOrElse(Array.empty).foreach { s =>
-          if (keep(s.getPath.getName)) add(s, fs)
-        }
-      }
-      out.toSeq.distinctBy(_._1)
+      val dir = s"$root/service/$dc/$service/logs/$date/$hour/$component"
+      BoomDataSource.listFiles(conf, Branches.map(b => s"$dir/$b"))
+        .map(s => (s.getPath.toString, s.getLen)).distinctBy(_._1)
     }.filter(_.nonEmpty)
   }
 }

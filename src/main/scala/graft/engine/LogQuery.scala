@@ -38,9 +38,6 @@ case class LogQuery(
 
   def range(start: Long, end: Long): LogQuery = copy(startMs = start, endMs = end)
   def where(p: LogPredicate): LogQuery = copy(predicate = p)
-  def withDateFormat(f: String): LogQuery = copy(dateFormat = f)
-  /** Bypass the catalog and read explicit files/dirs. */
-  def fromPaths(ps: Seq[String]): LogQuery = copy(paths = ps)
 
   def resolvePaths(spark: SparkSession): Seq[String] = {
     if (paths.nonEmpty) return paths
@@ -55,14 +52,16 @@ case class LogQuery(
   def lines(spark: SparkSession): Dataset[LogLine] = {
     import spark.implicits._
     val inputs = resolvePaths(spark)
-    if (inputs.isEmpty) {
-      spark.emptyDataset[LogLine]
-    } else {
-      var df = spark.read.format("boom").load(inputs: _*)
-      if (startMs != Long.MinValue) df = df.filter(col("timestamp") >= startMs)
-      if (endMs != Long.MaxValue) df = df.filter(col("timestamp") < endMs)
-      df.filter(predicate.toColumn(col("message"))).as[LogLine]
-    }
+    if (inputs.isEmpty) spark.emptyDataset[LogLine]
+    else filtered(spark, inputs).as[LogLine]
+  }
+
+  /** Boom scan of `files` → time filter → content predicate. */
+  private def filtered(spark: SparkSession, files: Seq[String]): DataFrame = {
+    var df = spark.read.format("boom").load(files: _*)
+    if (startMs != Long.MinValue) df = df.filter(col("timestamp") >= startMs)
+    if (endMs != Long.MaxValue) df = df.filter(col("timestamp") < endMs)
+    df.filter(predicate.toColumn(col("message")))
   }
 
   /** Pig formatAndSort stage (pig/formatAndSort.pg:24-47): quarantine rows
@@ -125,7 +124,7 @@ case class LogQuery(
     if (hourGroupsCache != null) return hourGroupsCache
     require(startMs != Long.MinValue && endMs != Long.MaxValue,
       "catalog-based queries need a bounded time range: call .range(startMs, endMs) " +
-        "or read explicit paths with .fromPaths(...)")
+        "or read explicit paths with LogQuery(paths = ...)")
     hourGroupsCache = LogCatalog.resolveByHourWithSizes(
       spark.sessionState.newHadoopConf(), root, dc, service, component, startMs, endMs)
     hourGroupsCache
@@ -137,36 +136,13 @@ case class LogQuery(
     */
   private def hourBranch(spark: SparkSession, files: Seq[String],
       rangeSort: Boolean): DataFrame = {
-    var df = spark.read.format("boom").load(files: _*)
-    if (startMs != Long.MinValue) df = df.filter(col("timestamp") >= startMs)
-    if (endMs != Long.MaxValue) df = df.filter(col("timestamp") < endMs)
-    df = df.filter(predicate.toColumn(col("message")))
+    val df = filtered(spark, files)
     if (rangeSort) LogQuery.formatAndSort(df, dateFormat)
     else
       LogQuery.format(df, dateFormat)
         .coalesce(1)
         .sortWithinPartitions(LogQuery.SortCols.map(col): _*)
         .select("formatted")
-  }
-
-  /** `formatted` with an observed `n_results` metric — the A4 result counter
-    * (the reference scraped the MR "Map output records" counter from its own
-    * captured stderr, LogTools.java:240-258; here it's a plan-level
-    * observation, free with the query):
-    * {{{
-    *   val ds = q.observedFormatted(spark)
-    *   ds.write.text(out)
-    *   val n = ds.observedMetrics("graft")  // via QueryExecutionListener
-    * }}}
-    */
-  def observedFormatted(spark: SparkSession): Dataset[String] = {
-    import spark.implicits._
-    // Observe ABOVE the global sort: the range partitioner runs a sampling
-    // pass over everything below its exchange, so an observation under the
-    // sort executes twice and double-counts.
-    LogQuery.formatAndSort(lines(spark).toDF(), dateFormat)
-      .observe("graft", count(lit(1)).as("n_results"))
-      .as[String]
   }
 
   /** Formatted lines collected to the driver — the `logcat`-to-stdout path.

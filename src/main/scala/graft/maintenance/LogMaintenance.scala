@@ -67,7 +67,7 @@ object LogMaintenance {
     }
     try {
       val files = graft.boom.BoomDataSource
-        .listFiles(spark, Seq(staged.toString))
+        .listFiles(conf, Seq(staged.toString))
         .map(s => (s.getPath, s.getLen))
       val totalBytes = files.map(_._2).sum
       val ratio =
@@ -223,7 +223,7 @@ object LogMaintenance {
       // and the per-file schema check refuses impostors (nothing is
       // silently skipped and then deleted with the working dir).
       val files = graft.boom.BoomDataSource
-        .listFiles(spark, Seq(staged.toString))
+        .listFiles(conf, Seq(staged.toString))
         .map(s => (s.getPath.toString, s.getLen))
         .sortBy(_._1)
       if (files.nonEmpty) {

@@ -91,11 +91,48 @@ class BoomPushdownSpec extends SparkTestBase {
     scans.head.asInstanceOf[BoomScan]
   }
 
+  /** Unpushed reference for the aggregate tests: every timestamp read
+    * through the row path (a bare projection pushes no aggregate), then
+    * range-filtered in the test itself. Returns (count, min, max).
+    */
+  private def reference(df: DataFrame, lo: Long, hi: Long): (Long, Option[Long], Option[Long]) = {
+    val ts = df.select("timestamp").collect().map(_.getLong(0)).filter(t => t >= lo && t < hi)
+    (ts.length.toLong, ts.minOption, ts.maxOption)
+  }
+
+  /** A Boom file laid out like the REFERENCE writer's (BoomWriter.java:73-74):
+    * (second, ms) by truncating / and %, so pre-epoch lines carry ms < 0.
+    * One logBlock per second.
+    */
+  private def writeTruncating(dir: String, ts: Seq[Long]): Unit = {
+    import org.apache.avro.file.DataFileWriter
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    val schema = BoomSchemas.logBlockSchema
+    val lineSchema = BoomSchemas.messageWithMillisSchema
+    val w = new DataFileWriter[GenericRecord](
+      new GenericDatumWriter[GenericRecord](schema))
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    w.create(schema, fs.create(new org.apache.hadoop.fs.Path(dir, "ref.bm"), true))
+    ts.groupBy(_ / 1000L).toSeq.sortBy(_._1).foreach { case (second, group) =>
+      val blk = new GenericData.Record(schema)
+      blk.put("second", second); blk.put("createTime", 0L); blk.put("blockNumber", 0L)
+      val lines = group.map { t =>
+        val line = new GenericData.Record(lineSchema)
+        line.put("ms", t % 1000L); line.put("eventId", 0); line.put("message", s"ref $t")
+        line
+      }
+      blk.put("logLines", java.util.List.of(lines: _*))
+      w.append(blk)
+    }
+    w.close()
+  }
+
   test("COUNT(*) under a time-only predicate plans a count-only scan") {
     val q = bm.where(col("timestamp") >= 1000010L && col("timestamp") < 1000060L)
       .groupBy().count()
     val scan = boomScanOf(q)
-    assert(scan.isCountOnly,
+    assert(scan.aggsPushed == Seq("count"),
       "COUNT over a time range must push into the scan (headers only)")
     assert(scan.readSchema().length === 1 &&
       scan.readSchema().head.dataType ===
@@ -103,25 +140,15 @@ class BoomPushdownSpec extends SparkTestBase {
     assert(!q.queryExecution.executedPlan.toString.contains("Filter ("))
     // The pushed count matches the row-level scan bit for bit (the range
     // is intra-second, so this exercises the per-line ms boundary path).
-    val expected = spark.read.format("boom").option("countPushdown", "false")
-      .load(dir)
-      .where(col("timestamp") >= 1000010L && col("timestamp") < 1000060L)
-      .count()
+    val expected = reference(bm, 1000010L, 1000060L)._1
     assert(expected === 50L)
     assert(q.head().getLong(0) === expected)
   }
 
   test("COUNT(*) with a term clause does NOT push (messages must decode)") {
     val q = bm.where(col("message").contains("msg 1 ")).groupBy().count()
-    assert(!boomScanOf(q).isCountOnly)
+    assert(boomScanOf(q).aggsPushed.isEmpty)
     assert(q.head().getLong(0) === 1L)
-  }
-
-  test("countPushdown=false read option disables the fast path") {
-    val q = spark.read.format("boom").option("countPushdown", "false")
-      .load(dir).groupBy().count()
-    assert(!boomScanOf(q).isCountOnly)
-    assert(q.head().getLong(0) === 100L)
   }
 
   test("MIN/MAX(timestamp) push into the scan and stay ms-exact at block boundaries") {
@@ -145,10 +172,7 @@ class BoomPushdownSpec extends SparkTestBase {
     assert(r.getLong(1) === 2015200L)
     assert(r.getLong(2) === 148L)
     // Bit-equality against the unpushed row-level scan.
-    val e = spark.read.format("boom").option("countPushdown", "false").load(d)
-      .where(col("timestamp") >= 2000500L && col("timestamp") < 2015300L)
-      .agg(min("timestamp"), max("timestamp"), count(lit(1))).head()
-    assert(r === e)
+    assert(reference(b, 2000500L, 2015300L) === ((148L, Some(2000500L), Some(2015200L))))
     // Empty range: pushed MIN/MAX must come back null, count 0.
     val z = b.where(col("timestamp") >= 9000000L)
       .agg(min("timestamp"), max("timestamp"), count(lit(1))).head()
@@ -174,10 +198,41 @@ class BoomPushdownSpec extends SparkTestBase {
     // (140), head of second 15 (3 lines) = 148.
     val q = b.where(col("timestamp") >= 2000500L && col("timestamp") < 2015300L)
       .groupBy().count()
-    assert(boomScanOf(q).isCountOnly)
+    assert(boomScanOf(q).aggsPushed == Seq("count"))
     assert(q.head().getLong(0) === 148L)
     // Unfiltered count() pushes too.
     assert(b.count() === 200L)
+
+    // Fixed-seed random corpora straddling the epoch: graft-written
+    // (floored) blocks plus a reference-style file whose second <= 0
+    // blocks carry negative ms, queried over ranges that mostly cut
+    // mid-second. COUNT alone and MIN/MAX/COUNT must both equal the
+    // row-level reference.
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val rd = Files.createTempDirectory(s"countrand$seed").toString
+      val ours = Seq.fill(300)(rnd.between(-6000L, 6000L)).sorted
+      Ingest.reboom(ours.map(t =>
+        graft.core.LogLine(t, s"line $t", 0, 0L, 0L, 1L)).toDF().coalesce(1), rd)
+      writeTruncating(rd, Seq.fill(200)(rnd.between(-6000L, 6000L)))
+      val rb = spark.read.format("boom").load(rd)
+      val ranges = Seq.fill(6) {
+        val lo = rnd.between(-7000L, 6000L)
+        (lo, lo + rnd.between(1L, 5000L))
+      } ++ Seq((-3000L, 2000L), (-9000L, 9000L))
+      ranges.foreach { case (lo, hi) =>
+        val in = rb.where(col("timestamp") >= lo && col("timestamp") < hi)
+        val (n, mn, mx) = reference(rb, lo, hi)
+        val cq = in.groupBy().count()
+        assert(boomScanOf(cq).aggsPushed == Seq("count"))
+        assert(cq.head().getLong(0) === n, s"seed $seed count [$lo, $hi)")
+        val aq = in.agg(min("timestamp"), max("timestamp"), count(lit(1)))
+        assert(boomScanOf(aq).aggsPushed.toSet === Set("min", "max", "count"))
+        val r = aq.head()
+        assert((r.getLong(2), Option(r.get(0)), Option(r.get(1))) === ((n, mn, mx)),
+          s"seed $seed min/max/count [$lo, $hi)")
+      }
+    }
   }
 
   test("ci prescan never skips a block whose Unicode uppercase would match") {
@@ -213,24 +268,8 @@ class BoomPushdownSpec extends SparkTestBase {
     // The reference writer derives (second, ms) with truncating / and %
     // (BoomWriter.java:73-74): ts=-500 lands in block second=0 with
     // ms=-500. Build such a block directly and check skip + count paths.
-    import org.apache.avro.file.DataFileWriter
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
     val d = Files.createTempDirectory("pushdown-preepoch").toString
-    val schema = BoomSchemas.logBlockSchema
-    val lineSchema = BoomSchemas.messageWithMillisSchema
-    val w = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](schema))
-    val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    w.create(schema, fs.create(new org.apache.hadoop.fs.Path(d, "a.bm"), true))
-    val blk = new GenericData.Record(schema)
-    blk.put("second", 0L); blk.put("createTime", 0L); blk.put("blockNumber", 0L)
-    val line = new GenericData.Record(lineSchema)
-    line.put("ms", -500L); line.put("eventId", 0); line.put("message", "pre epoch")
-    val line2 = new GenericData.Record(lineSchema)
-    line2.put("ms", 500L); line2.put("eventId", 0); line2.put("message", "post epoch")
-    blk.put("logLines", java.util.List.of(line, line2))
-    w.append(blk); w.close()
+    writeTruncating(d, Seq(-500L, 500L))
     val pre = spark.read.format("boom").load(d)
     // Range covering only the negative-ms line: block skip must not fire.
     assert(pre.where(col("timestamp") >= -600L && col("timestamp") < -400L)

@@ -110,6 +110,91 @@ class BoomRoundTripSpec extends SparkTestBase {
     assert(readAll(bm.getAbsolutePath) === 500)
   }
 
+  test("corrupt block count/size varints fail with the file and offset, never short or OOM") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("boom-varint").toString
+    val lines = (0 until 500).map(i =>
+      graft.core.LogLine(1000000L + i * 1000L, s"line $i " + ("z" * 100), 0, 0L, 0L, 1L))
+    Ingest.reboom(lines.toDF().coalesce(1), dir)
+    val bm = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".bm")).head
+    val bytes = Files.readAllBytes(bm.toPath)
+    val hconf = spark.sessionState.newHadoopConf()
+
+    def zigzag(v: Long): Array[Byte] = {
+      var z = (v << 1) ^ (v >> 63)
+      val out = scala.collection.mutable.ArrayBuffer[Byte]()
+      while ((z & ~0x7FL) != 0) { out += ((z & 0x7F) | 0x80).toByte; z >>>= 7 }
+      out += z.toByte
+      out.toArray
+    }
+    def varintAt(at: Int): (Long, Int) = { // (value, encoded length)
+      var acc = 0L; var shift = 0; var i = at
+      while ((bytes(i) & 0x80) != 0) { acc |= (bytes(i) & 0x7FL) << shift; shift += 7; i += 1 }
+      acc |= (bytes(i) & 0x7FL) << shift
+      ((acc >>> 1) ^ -(acc & 1L), i + 1 - at)
+    }
+    // Every frame ends with the file's sync marker, and so does the header:
+    // the first frame starts right after its first occurrence.
+    val headerEnd = bytes.indexOfSlice(bytes.takeRight(16)) + 16
+    val (_, countLen) = varintAt(headerEnd)
+    val sizeAt = headerEnd + countLen
+    val (size, sizeLen) = varintAt(sizeAt)
+    val payloadAt = sizeAt + sizeLen
+
+    def variant(name: String, content: Array[Byte]): String = {
+      val f = Files.createTempFile(name, ".bm")
+      Files.write(f, content)
+      f.toString
+    }
+    def withSize(v: Long): Array[Byte] =
+      bytes.take(sizeAt) ++ zigzag(v) ++ bytes.drop(payloadAt)
+    def withCount(v: Long): Array[Byte] =
+      bytes.take(headerEnd) ++ zigzag(v) ++ bytes.drop(sizeAt)
+    def readAll(path: String): Long = {
+      val it = new BoomFileRangeIterator(
+        new org.apache.avro.mapred.FsInput(new org.apache.hadoop.fs.Path(path), hconf),
+        BoomPushdown(), 0L, Long.MaxValue, path)
+      try { var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n }
+      finally it.close()
+    }
+
+    Seq(
+      variant("negsize", withSize(-5L)) -> sizeAt,
+      variant("hugesize", withSize(1L << 30)) -> sizeAt,
+      variant("cutpayload", bytes.take(payloadAt + (size / 2).toInt)) -> sizeAt,
+      variant("negcount", withCount(-1L)) -> headerEnd,
+      variant("hugecount", withCount(1L << 30)) -> headerEnd
+    ).foreach { case (f, at) =>
+      val e = intercept[java.io.IOException](readAll(f))
+      assert(e.getMessage.contains(f) && e.getMessage.contains(s"at byte $at"),
+        e.getMessage)
+      // The task read path names the file too, for rows and pushed counts.
+      val name = java.nio.file.Paths.get(f).getFileName.toString
+      Seq[() => Any](
+        () => spark.read.format("boom").load(f).collect(),
+        () => spark.read.format("boom").load(f).count()).foreach { run =>
+        val se = intercept[org.apache.spark.SparkException](run())
+        assert(se.getMessage.contains(name), se.getMessage)
+      }
+    }
+    assert(readAll(bm.getAbsolutePath) === 500)
+  }
+
+  test("paths option and stream offsets round-trip control characters in file names") {
+    import spark.implicits._
+    val ps = Seq("/logs/a\tb", "/logs/c\u0001d", "/logs/q\"uote\\")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(ps.toArray)
+    assert(BoomDataSource.extractPaths(java.util.Map.of("paths", json)) === ps)
+    assert(BoomOffset.fromJson(BoomOffset(ps).json).files === ps.sorted)
+    // Through DataFrameReader, which sends several paths as that JSON.
+    val base = Files.createTempDirectory("boom-paths")
+    val dirs = Seq("tab\there", "plain").map(n => base.resolve(n).toString)
+    dirs.foreach(d => Ingest.reboom(
+      Seq(graft.core.LogLine(1000L, d, 0, 0L, 0L, 1L)).toDF().coalesce(1), d))
+    assert(spark.read.format("boom").load(dirs: _*).select("message").as[String]
+      .collect().toSet === dirs.toSet)
+  }
+
   test("two-phase commit: task commit stages, job commit promotes, abort cleans all hours") {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.unsafe.types.UTF8String
