@@ -72,15 +72,15 @@ object LogToolCli {
       case s if s.startsWith("--dateFormat=") => a = a.copy(dateFormat = s.drop(13))
       case s if s.startsWith("--root=") => a = a.copy(root = s.drop(7))
       case s if s.startsWith("-D") => () // hadoop-style conf passthrough: ignored
-      case other => die(s"$tool: unrecognized argument: $other")
+      case other => usageError(s"$tool: unrecognized argument: $other")
     }
     if (a.dc == null || a.svc == null || a.comp == null) {
-      die(s"$tool: -dc, -svc and -comp are required")
+      usageError(s"$tool: -dc, -svc and -comp are required")
     }
     if (a.startMs == Long.MinValue || a.endMs == Long.MaxValue) {
-      die(s"$tool: -start and -end are required")
+      usageError(s"$tool: -start and -end are required")
     }
-    if (a.startMs >= a.endMs) die(s"$tool: start must be before end")
+    if (a.startMs >= a.endMs) usageError(s"$tool: start must be before end")
     a
   }
 
@@ -111,7 +111,7 @@ object LogToolCli {
       return LocalDate.parse(trimmed, DateTimeFormatter.ofPattern("yyyy-MM-dd"))
         .atStartOfDay.toEpochSecond(ZoneOffset.UTC) * 1000L
     } catch { case _: Exception => () }
-    parseRelativeDate(trimmed, nowMs).getOrElse(die(s"cannot parse date: $s"))
+    parseRelativeDate(trimmed, nowMs).getOrElse(usageError(s"cannot parse date: $s"))
   }
 
   /** GNU date(1) relative expressions: now / today / yesterday / tomorrow,
@@ -151,10 +151,12 @@ object LogToolCli {
     }
   }
 
-  private def die(msg: String): Nothing = {
-    System.err.println(s";$msg")
-    sys.exit(1)
-  }
+  /** A bad command line. [[run]] prints its message as the `;`-prefixed
+    * status line, with no `failed:` prefix, and exits 1.
+    */
+  final class UsageError(msg: String) extends IllegalArgumentException(msg)
+
+  private[cli] def usageError(msg: String): Nothing = throw new UsageError(msg)
 
   def session(): SparkSession = {
     val s = SparkSession.builder()
@@ -171,24 +173,28 @@ object LogToolCli {
   }
 
   def run(tool: String, argv: Array[String], predicate: Args => LogPredicate): Unit = {
+    def fail(e: Exception): Nothing = {
+      System.err.println(failureLine(tool, e))
+      sys.exit(1)
+    }
     // Fail fast on argv problems BEFORE paying SparkSession startup.
     try { predicate(parseArgs(argv, tool)); () }
-    catch {
-      case e: Exception =>
-        System.err.println(s";$tool failed: ${translateError(e)}")
-        sys.exit(1)
-    }
+    catch { case e: Exception => fail(e) }
     val spark = session()
     try runWith(spark, tool, argv, predicate)
-    catch {
-      case e: Exception =>
-        System.err.println(s";$tool failed: ${translateError(e)}")
-        sys.exit(1)
-    } finally spark.stop()
+    catch { case e: Exception => fail(e) }
+    finally spark.stop()
+  }
+
+  /** The `;`-prefixed stderr line [[run]] prints before exiting 1. */
+  private[cli] def failureLine(tool: String, e: Exception): String = e match {
+    case u: UsageError => s";${u.getMessage}"
+    case _ => s";$tool failed: ${translateError(e)}"
   }
 
   /** [[run]] minus session lifecycle and exit-code handling — callable on
-    * an existing session (tests, embedding); errors propagate.
+    * an existing session (tests, embedding); errors propagate, a bad
+    * command line as a [[UsageError]].
     */
   def runWith(spark: SparkSession, tool: String, argv: Array[String],
       predicate: Args => LogPredicate): Unit = {
@@ -259,7 +265,7 @@ object logcat {
 object loggrep {
   def main(argv: Array[String]): Unit =
     LogToolCli.run("loggrep", argv, a => {
-      if (a.regex == null) { System.err.println(";loggrep: -regex is required"); sys.exit(1) }
+      if (a.regex == null) LogToolCli.usageError("loggrep: -regex is required")
       Grep(a.regex, a.caseInsensitive)
     })
 }
@@ -267,7 +273,7 @@ object loggrep {
 object logsearch {
   def main(argv: Array[String]): Unit =
     LogToolCli.run("logsearch", argv, a => {
-      if (a.string == null) { System.err.println(";logsearch: -string is required"); sys.exit(1) }
+      if (a.string == null) LogToolCli.usageError("logsearch: -string is required")
       Search(a.string, a.caseInsensitive)
     })
 }
@@ -275,7 +281,7 @@ object logsearch {
 object logmultisearch {
   def main(argv: Array[String]): Unit =
     LogToolCli.run("logmultisearch", argv, a => {
-      if (a.strings == null) { System.err.println(";logmultisearch: -strings is required"); sys.exit(1) }
+      if (a.strings == null) LogToolCli.usageError("logmultisearch: -strings is required")
       MultiSearch(LogToolCli.loadTerms(a.strings), a.matchAll, a.caseInsensitive)
     })
 }

@@ -4,7 +4,11 @@ import graft.boom.BoomDataSource
 import graft.core.LogLine
 import graft.functions.functions.format_log_date
 
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** The whole query pipeline of the reference's four CLI tools as ONE declarative
@@ -69,13 +73,13 @@ case class LogQuery(
     * drop null-formatted rows, ORDER BY the canonical key, keep only the
     * formatted column.
     *
-    * CATALOG queries (the logcat/loggrep/logsearch CLI path) skip the global
-    * sort's range-sampling pass + shuffle entirely: each hour bucket is read
-    * into one partition and sorted within it, buckets concatenated in hour
-    * order ([[formattedByHour]]) — no Exchange anywhere in the plan. The
-    * catalog layout guarantees an hour directory only holds that hour's
-    * lines (fs/PathInfo.java:21-86), which is what makes the concatenation
-    * a correct global order. Explicit-path queries (no layout guarantee)
+    * CATALOG queries (the CLI's `--out` path; stdout goes through
+    * [[printTo]]) skip the global sort's range-sampling pass + shuffle
+    * entirely: each hour bucket is read into one partition and sorted
+    * within it, buckets concatenated in hour order ([[formattedByHour]]) —
+    * no Exchange anywhere in the plan. The catalog layout guarantees an
+    * hour directory only holds that hour's lines (fs/PathInfo.java:21-86),
+    * which is what makes the concatenation a correct global order. Explicit-path queries (no layout guarantee)
     * use the range-partitioned global sort.
     */
   def formatted(spark: SparkSession): Dataset[String] = {
@@ -90,9 +94,11 @@ case class LogQuery(
     * only holds lines of that hour (fs/PathInfo.java:21-86 — the uploaders
     * and the hourly writer both guarantee it); data violating it would sort
     * within the wrong bucket. This is [[formatted]]'s default for catalog
-    * queries. Parallelism is one task per hour — the right trade for the
-    * bounded ranges logcat serves (at 100 TB a logcat window is
-    * hours-to-days of one component, and hours sort independently).
+    * queries. The hour branches are NOT one task each: Spark plans the union
+    * of single-partition branches as one output partition
+    * (`spark.sql.unionOutputPartitioning`), so writing this Dataset (the
+    * CLI's `--out`) runs the whole window in one task. [[printTo]] does not
+    * read through here; it merges parallel sorted runs instead.
     *
     * OVERSIZED hours route themselves to the range sort automatically: the
     * catalog listing's file sizes (free — the same globStatus pass) total
@@ -145,13 +151,53 @@ case class LogQuery(
         .select("formatted")
   }
 
-  /** Formatted lines collected to the driver — the `logcat`-to-stdout path.
-    * Streams partitions in order; never materializes the whole result.
+  /** Formatted lines in output order, handed to `out` one at a time — the
+    * logcat-to-stdout path. Returns the number of lines.
+    *
+    * CATALOG queries pack consecutive hours into waves of at most
+    * [[LogQuery.DefaultHourSortMaxBytes]] compressed bytes. A wave is ONE
+    * Boom scan over all of its files: each scan partition filters, formats
+    * and sorts its own lines (no exchange), every partition runs in one
+    * Spark job, and the driver k-way merges the sorted runs on the full
+    * sort key, emitting each line as it is merged. Within a wave the merge
+    * is a true global sort; waves follow hour order, which the layout makes
+    * time-disjoint (fs/PathInfo.java:21-86). An hour over the budget on its
+    * own, and every explicit-path query, streams from the range-partitioned
+    * sort one partition at a time instead.
     */
-  def printTo(spark: SparkSession, out: String => Unit): Long = {
+  def printTo(spark: SparkSession, out: String => Unit): Long =
+    printInWaves(spark, out, LogQuery.DefaultHourSortMaxBytes)
+
+  /** [[printTo]] with the wave budget as a parameter (a test seam). */
+  private[engine] def printInWaves(spark: SparkSession, out: String => Unit,
+      maxWaveBytes: Long): Long = {
+    import spark.implicits._
     var n = 0L
-    formatted(spark).toLocalIterator().forEachRemaining { s => out(s); n += 1 }
+    def emit(s: String): Unit = { out(s); n += 1 }
+    def stream(ds: Dataset[String]): Unit = ds.toLocalIterator().forEachRemaining(emit(_))
+    if (paths.nonEmpty) stream(formatted(spark))
+    else LogQuery.waves(resolveHourGroups(spark), maxWaveBytes).foreach { wave =>
+      val files = wave.map(_._1)
+      if (wave.map(_._2).sum > maxWaveBytes)
+        stream(hourBranch(spark, files, rangeSort = true).as[String])
+      else LogQuery.merge(sortedRuns(spark, files), emit)
+    }
     n
+  }
+
+  /** One scan over `files`, each partition filtered, formatted and sorted
+    * on its own, all partitions run as one job: one sorted run per
+    * partition.
+    */
+  private def sortedRuns(spark: SparkSession, files: Seq[String]): Array[LogQuery.SortedRun] = {
+    val qe = LogQuery.format(filtered(spark, files), dateFormat)
+      .sortWithinPartitions(LogQuery.SortCols.map(col): _*)
+      .select((LogQuery.SortCols :+ "formatted").map(col): _*)
+      .queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("printTo")) {
+      spark.sparkContext.runJob(qe.toRdd,
+        (rows: Iterator[InternalRow]) => LogQuery.SortedRun(rows))
+    }
   }
 }
 
@@ -163,9 +209,73 @@ object LogQuery {
     * (compressed on-disk bytes; boom decompresses ~5-10×, so 1 GiB here
     * is a several-GiB single-task sort — the edge of comfortable). Hours
     * past it route to the range-partitioned sort in
-    * [[LogQuery#formattedByHour]].
+    * [[LogQuery#formattedByHour]]. It is also [[LogQuery#printTo]]'s wave
+    * budget: the most input whose merged result the driver holds at once.
     */
   val DefaultHourSortMaxBytes: Long = 1L << 30
+
+  /** Hour groups packed greedily, in order, into waves of at most
+    * `maxBytes` (the groups' listed file sizes). Every wave holds at least
+    * one hour, so a wave over the budget is a single hour.
+    */
+  private[engine] def waves(hours: Seq[Seq[(String, Long)]],
+      maxBytes: Long): Seq[Seq[(String, Long)]] = {
+    val out = ArrayBuffer[Seq[(String, Long)]]()
+    var wave = Vector.empty[(String, Long)]
+    var bytes = 0L
+    hours.foreach { hour =>
+      val hourBytes = hour.map(_._2).sum
+      if (wave.nonEmpty && bytes + hourBytes > maxBytes) {
+        out += wave; wave = Vector.empty; bytes = 0L
+      }
+      wave ++= hour; bytes += hourBytes
+    }
+    if (wave.nonEmpty) out += wave
+    out.toSeq
+  }
+
+  /** One partition's lines in [[SortCols]] order: `keys` holds the four
+    * sort-key longs of line `i` at `4 * i` until `4 * i + 3`.
+    */
+  private[engine] final class SortedRun(val keys: Array[Long], val lines: Array[String])
+      extends Serializable
+
+  private[engine] object SortedRun {
+    /** Reads rows of (SortCols..., formatted). */
+    def apply(rows: Iterator[InternalRow]): SortedRun = {
+      val keys = new ArrayBuilder.ofLong
+      val lines = new ArrayBuilder.ofRef[String]
+      rows.foreach { r =>
+        var i = 0
+        while (i < 4) { keys += r.getLong(i); i += 1 }
+        lines += r.getUTF8String(4).toString
+      }
+      new SortedRun(keys.result(), lines.result())
+    }
+  }
+
+  /** Streaming k-way merge of sorted runs on (SortCols, run index). */
+  private[engine] def merge(runs: Array[SortedRun], out: String => Unit): Unit = {
+    val pos = new Array[Int](runs.length)
+    def compare(a: Int, b: Int): Int = {
+      val ka = runs(a).keys; val kb = runs(b).keys
+      var c = 0
+      var i = 0
+      while (c == 0 && i < 4) {
+        c = java.lang.Long.compare(ka(4 * pos(a) + i), kb(4 * pos(b) + i)); i += 1
+      }
+      if (c != 0) c else Integer.compare(a, b)
+    }
+    val heap = new java.util.PriorityQueue[Integer](math.max(1, runs.length),
+      (a: Integer, b: Integer) => compare(a, b))
+    runs.indices.foreach(r => if (runs(r).lines.nonEmpty) heap.add(r))
+    while (!heap.isEmpty) {
+      val r: Int = heap.poll()
+      out(runs(r).lines(pos(r)))
+      pos(r) += 1
+      if (pos(r) < runs(r).lines.length) heap.add(r)
+    }
+  }
 
   /** Quarantine + format stages, keeping the sort-key columns. */
   private[engine] def format(df: DataFrame, dateFormat: String): DataFrame = {
