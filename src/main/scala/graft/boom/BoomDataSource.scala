@@ -11,6 +11,7 @@ import graft.core.LogLine
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -289,8 +290,8 @@ class BoomScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
       clauses = clauses,
       needMessage = aggsPushed.isEmpty &&
         requiredSchema.fieldNames.contains("message"))
-    new BoomScan(paths, files, requiredSchema, pushdown, options,
-      new SerializableConfiguration(hconf), pushedAggs = aggsPushed)
+    new BoomScan(paths, files, requiredSchema, pushdown, options, hconf,
+      pushedAggs = aggsPushed)
   }
 }
 
@@ -298,10 +299,10 @@ class BoomScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
   * time (length = Long.MaxValue means "to end of file").
   */
 case class BoomFileSlice(path: String, start: Long, length: Long) {
-  def open(pushdown: BoomPushdown, hconf: SerializableConfiguration): BoomFileRangeIterator = {
+  def open(pushdown: BoomPushdown, hconf: Configuration): BoomFileRangeIterator = {
     val end = if (length == Long.MaxValue) Long.MaxValue else start + length
     new BoomFileRangeIterator(
-      new org.apache.avro.mapred.FsInput(new Path(path), hconf.value),
+      new org.apache.avro.mapred.FsInput(new Path(path), hconf),
       pushdown, start, end, path)
   }
 }
@@ -315,7 +316,7 @@ class BoomScan(
     requiredSchema: StructType,
     pushdown: BoomPushdown,
     options: CaseInsensitiveStringMap,
-    hconf: SerializableConfiguration,
+    hconf: Configuration,
     pushedAggs: Seq[String] = Nil) extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType =
@@ -392,34 +393,43 @@ class BoomScan(
     partitions.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BoomReaderFactory(requiredSchema, pushdown, hconf, pushedAggs)
+  /** The Hadoop conf (~110 KB serialized) goes out as ONE broadcast per
+    * scan, as Spark's own file sources ship it, not inside every task.
+    * Memoized: planning asks for the factory more than once per scan.
+    */
+  private lazy val readerFactory = new BoomReaderFactory(requiredSchema, pushdown,
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hconf)), pushedAggs)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Public surface for plan assertions: which aggregates were pushed? */
   def aggsPushed: Seq[String] = pushedAggs
 
   override def estimateStatistics(): Statistics = new Statistics {
-    // Deflate-6 log text inflates ~8x; rows ≈ bytes / ~150 B/line. Rough but
-    // lets Catalyst consider broadcasting small Boom relations.
-    private val raw = files.map(_.getLen).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(raw * 8)
-    override def numRows(): OptionalLong = OptionalLong.of(math.max(1L, raw * 8 / 150))
+    // Rows ≈ inflated bytes / ~150 B/line. Rough but lets Catalyst
+    // consider broadcasting small Boom relations.
+    private val inflated = files.map(_.getLen).sum * BoomSchemas.InflationBound
+    override def sizeInBytes(): OptionalLong = OptionalLong.of(inflated)
+    override def numRows(): OptionalLong = OptionalLong.of(math.max(1L, inflated / 150))
   }
 }
 
 /** Row reader per partition, or — when aggregates were pushed — one
-  * partial-aggregate row per partition.
+  * partial-aggregate row per partition. The Hadoop conf arrives as a
+  * broadcast: a local-mode task reads the driver's object, and an executor
+  * deserializes it once per scan, not once per task.
   */
 class BoomReaderFactory(
     requiredSchema: StructType,
     pushdown: BoomPushdown,
-    hconf: SerializableConfiguration,
+    hconf: Broadcast[SerializableConfiguration],
     aggs: Seq[String] = Nil) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[BoomInputPartition]
-    if (aggs.nonEmpty) new BoomAggPartitionReader(p, pushdown, aggs, hconf)
-    else new BoomPartitionReader(p, requiredSchema, pushdown, hconf)
+    val conf = hconf.value.value
+    if (aggs.nonEmpty) new BoomAggPartitionReader(p, pushdown, aggs, conf)
+    else new BoomPartitionReader(p, requiredSchema, pushdown, conf)
   }
 }
 
@@ -436,7 +446,7 @@ class BoomAggPartitionReader(
     partition: BoomInputPartition,
     pushdown: BoomPushdown,
     aggs: Seq[String],
-    hconf: SerializableConfiguration) extends PartitionReader[InternalRow] {
+    hconf: Configuration) extends PartitionReader[InternalRow] {
 
   private var emitted = false
   private var row: InternalRow = _
@@ -472,7 +482,7 @@ class BoomPartitionReader(
     partition: BoomInputPartition,
     requiredSchema: StructType,
     pushdown: BoomPushdown,
-    hconf: SerializableConfiguration) extends PartitionReader[InternalRow] {
+    hconf: Configuration) extends PartitionReader[InternalRow] {
 
   // Ordinal of each output column: 0=timestamp 1=message 2=eventId
   // 3=createTime 4=blockNumber 5=lineNumber

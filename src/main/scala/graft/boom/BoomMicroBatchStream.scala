@@ -41,7 +41,7 @@ class BoomMicroBatchStream(
     options: CaseInsensitiveStringMap) extends MicroBatchStream {
 
   private val spark = SparkSession.active
-  private val hconf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+  private val hconf = spark.sessionState.newHadoopConf()
   private val maxFilesPerBatch =
     Option(options.get("maxFilesPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue)
 
@@ -62,7 +62,7 @@ class BoomMicroBatchStream(
   }
 
   private def currentFiles(): Seq[String] =
-    BoomDataSource.listFiles(hconf.value, paths).map(_.getPath.toString).sorted
+    BoomDataSource.listFiles(hconf, paths).map(_.getPath.toString).sorted
 
   override def initialOffset(): Offset = BoomOffset(Seq.empty)
 
@@ -92,9 +92,14 @@ class BoomMicroBatchStream(
     out.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BoomReaderFactory(schema, BoomPushdown(needMessage =
-      schema.fieldNames.contains("message")), hconf)
+  /** One broadcast of the Hadoop conf for the stream's life, not one copy
+    * per task.
+    */
+  private lazy val readerFactory = new BoomReaderFactory(schema,
+    BoomPushdown(needMessage = schema.fieldNames.contains("message")),
+    spark.sparkContext.broadcast(new SerializableConfiguration(hconf)))
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def stop(): Unit = ()
 }

@@ -30,4 +30,11 @@ object BoomSchemas {
   val DeflateLevel = 6
   val AvroSyncInterval: Int = 2 * 1024 * 1024
   val MaxLinesPerBlock = 1000
+
+  /** How far a `.bm` file's compressed bytes are assumed to inflate once
+    * decoded (deflate-6 log text runs ~5-8×). It sizes the scan's
+    * statistics and [[graft.engine.LogQuery#printTo]]'s wave budget, the
+    * compressed input whose decoded lines one job may return to the driver.
+    */
+  val InflationBound = 8L
 }

@@ -4,7 +4,9 @@ import java.util.UUID
 
 import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -55,7 +57,7 @@ class BoomWriteBuilder(paths: Seq[String], info: LogicalWriteInfo)
       val hourlyDirs = info.options().getBoolean("hourlyDirs", false)
       val hourlySuffix = info.options().getOrDefault("hourlySuffix", "")
       new BoomBatchWrite(paths.head, mode, hourlyDirs, hourlySuffix, doTruncate,
-        new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+        spark.sessionState.newHadoopConf())
     }
   }
 }
@@ -66,16 +68,20 @@ class BoomBatchWrite(
     hourlyDirs: Boolean,
     hourlySuffix: String,
     truncate: Boolean,
-    hconf: SerializableConfiguration) extends BatchWrite {
+    hconf: Configuration) extends BatchWrite {
 
+  /** The tasks get the Hadoop conf as one broadcast per write, not a copy
+    * each; job commit and abort run here and use `hconf` directly.
+    */
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(hconf.value)
+    val fs = dir.getFileSystem(hconf)
     if (truncate && fs.exists(dir)) {
       fs.listStatus(dir).foreach(s => fs.delete(s.getPath, true))
     }
     fs.mkdirs(dir)
-    new BoomWriterFactory(path, mode, hourlyDirs, hourlySuffix, hconf)
+    new BoomWriterFactory(path, mode, hourlyDirs, hourlySuffix,
+      SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hconf)))
   }
 
   /** Job commit: promote every staged file reported by the committed task
@@ -86,7 +92,7 @@ class BoomBatchWrite(
     * O(1) metadata ops on HDFS-like stores.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hconf.value)
+    val fs = new Path(path).getFileSystem(hconf)
     messages.foreach {
       case BoomCommitMessage(staged, _) =>
         staged.foreach { case (tmp, dest) =>
@@ -104,7 +110,7 @@ class BoomBatchWrite(
     * (running/failed tasks clean their own staging in DataWriter.abort).
     */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hconf.value)
+    val fs = new Path(path).getFileSystem(hconf)
     messages.foreach {
       case BoomCommitMessage(staged, _) =>
         staged.foreach { case (tmp, _) =>
@@ -121,11 +127,13 @@ case class BoomCommitMessage(staged: Seq[(String, String)], rows: Long)
 
 class BoomWriterFactory(
     path: String, mode: String, hourlyDirs: Boolean, hourlySuffix: String,
-    hconf: SerializableConfiguration)
+    hconf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (hourlyDirs) new BoomHourlyDataWriter(path, mode, hourlySuffix, partitionId, taskId, hconf)
-    else new BoomDataWriter(path, mode, partitionId, taskId, hconf)
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
+    val conf = hconf.value.value
+    if (hourlyDirs) new BoomHourlyDataWriter(path, mode, hourlySuffix, partitionId, taskId, conf)
+    else new BoomDataWriter(path, mode, partitionId, taskId, conf)
+  }
 }
 
 /** Hour-rolling Boom writer — the reference's hourly output format
@@ -144,7 +152,7 @@ class BoomHourlyDataWriter(
     hourlySuffix: String,
     partitionId: Int,
     taskId: Long,
-    hconf: SerializableConfiguration) extends DataWriter[InternalRow] {
+    hconf: Configuration) extends DataWriter[InternalRow] {
 
   private val hourFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyyMMdd/HH").withZone(java.time.ZoneOffset.UTC)
@@ -197,7 +205,7 @@ class BoomHourlyDataWriter(
   override def abort(): Unit = {
     if (delegate != null) delegate.abort()
     if (staged.nonEmpty) {
-      val fs = new Path(dir).getFileSystem(hconf.value)
+      val fs = new Path(dir).getFileSystem(hconf)
       staged.foreach { case (tmp, _) =>
         try fs.delete(new Path(tmp), false) catch { case _: Exception => () }
       }
@@ -214,7 +222,7 @@ class BoomDataWriter(
     mode: String,
     partitionId: Int,
     taskId: Long,
-    hconf: SerializableConfiguration) extends DataWriter[InternalRow] {
+    hconf: Configuration) extends DataWriter[InternalRow] {
 
   private val ingest = mode.equalsIgnoreCase("ingest")
   private val blockSchema = BoomSchemas.logBlockSchema
@@ -223,7 +231,7 @@ class BoomDataWriter(
   private val finalName = f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.bm"
   private val tmpPath = new Path(dir, finalName + ".tmp")
   private val finalPath = new Path(dir, finalName)
-  private val fs = tmpPath.getFileSystem(hconf.value)
+  private val fs = tmpPath.getFileSystem(hconf)
 
   private lazy val writer: DataFileWriter[GenericRecord] = {
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](blockSchema))

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.boom.BoomDataSource
+import graft.boom.BoomSchemas
 import graft.core.LogLine
 import graft.functions.functions.format_log_date
 
@@ -57,16 +57,25 @@ case class LogQuery(
     import spark.implicits._
     val inputs = resolvePaths(spark)
     if (inputs.isEmpty) spark.emptyDataset[LogLine]
-    else filtered(spark, inputs).as[LogLine]
+    else scan(spark, inputs).where(conditions.reduce(_ && _)).as[LogLine]
   }
 
-  /** Boom scan of `files` → time filter → content predicate. */
-  private def filtered(spark: SparkSession, files: Seq[String]): DataFrame = {
-    var df = spark.read.format("boom").load(files: _*)
-    if (startMs != Long.MinValue) df = df.filter(col("timestamp") >= startMs)
-    if (endMs != Long.MaxValue) df = df.filter(col("timestamp") < endMs)
-    df.filter(predicate.toColumn(col("message")))
-  }
+  private def scan(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.format("boom").load(files: _*)
+
+  /** The time bounds and the content predicate, as conjuncts. */
+  private def conditions: Seq[Column] =
+    Option.when(startMs != Long.MinValue)(col("timestamp") >= startMs).toSeq ++
+      Option.when(endMs != Long.MaxValue)(col("timestamp") < endMs) :+
+      predicate.toColumn(col("message"))
+
+  /** Boom scan of `files` → filter → format. Every Dataset step is analysed
+    * eagerly, at 1-2 ms each, so all [[conditions]] and the quarantine share
+    * ONE `where`: a query's fixed cost, not its scan, dominates at
+    * interactive scale.
+    */
+  private def formattedRows(spark: SparkSession, files: Seq[String]): DataFrame =
+    LogQuery.format(scan(spark, files), dateFormat, conditions)
 
   /** Pig formatAndSort stage (pig/formatAndSort.pg:24-47): quarantine rows
     * with null sort keys, project `CONCAT(DateFormatter(time), ' ', message)`,
@@ -142,11 +151,10 @@ case class LogQuery(
     */
   private def hourBranch(spark: SparkSession, files: Seq[String],
       rangeSort: Boolean): DataFrame = {
-    val df = filtered(spark, files)
-    if (rangeSort) LogQuery.formatAndSort(df, dateFormat)
+    val df = formattedRows(spark, files)
+    if (rangeSort) LogQuery.sortFormatted(df)
     else
-      LogQuery.format(df, dateFormat)
-        .coalesce(1)
+      df.coalesce(1)
         .sortWithinPartitions(LogQuery.SortCols.map(col): _*)
         .select("formatted")
   }
@@ -155,7 +163,8 @@ case class LogQuery(
     * logcat-to-stdout path. Returns the number of lines.
     *
     * CATALOG queries pack consecutive hours into waves of at most
-    * [[LogQuery.DefaultHourSortMaxBytes]] compressed bytes. A wave is ONE
+    * [[LogQuery.waveBudget]] compressed bytes, which keeps a wave's
+    * returned runs under `spark.driver.maxResultSize`. A wave is ONE
     * Boom scan over all of its files: each scan partition filters, formats
     * and sorts its own lines (no exchange), every partition runs in one
     * Spark job, and the driver k-way merges the sorted runs on the full
@@ -166,7 +175,8 @@ case class LogQuery(
     * sort one partition at a time instead.
     */
   def printTo(spark: SparkSession, out: String => Unit): Long =
-    printInWaves(spark, out, LogQuery.DefaultHourSortMaxBytes)
+    printInWaves(spark, out, LogQuery.waveBudget(
+      spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")))
 
   /** [[printTo]] with the wave budget as a parameter (a test seam). */
   private[engine] def printInWaves(spark: SparkSession, out: String => Unit,
@@ -190,9 +200,8 @@ case class LogQuery(
     * partition.
     */
   private def sortedRuns(spark: SparkSession, files: Seq[String]): Array[LogQuery.SortedRun] = {
-    val qe = LogQuery.format(filtered(spark, files), dateFormat)
+    val qe = formattedRows(spark, files)
       .sortWithinPartitions(LogQuery.SortCols.map(col): _*)
-      .select((LogQuery.SortCols :+ "formatted").map(col): _*)
       .queryExecution
     SQLExecution.withNewExecutionId(qe, Some("printTo")) {
       spark.sparkContext.runJob(qe.toRdd,
@@ -209,10 +218,21 @@ object LogQuery {
     * (compressed on-disk bytes; boom decompresses ~5-10×, so 1 GiB here
     * is a several-GiB single-task sort — the edge of comfortable). Hours
     * past it route to the range-partitioned sort in
-    * [[LogQuery#formattedByHour]]. It is also [[LogQuery#printTo]]'s wave
+    * [[LogQuery#formattedByHour]]. It also caps [[LogQuery#printTo]]'s wave
     * budget: the most input whose merged result the driver holds at once.
     */
   val DefaultHourSortMaxBytes: Long = 1L << 30
+
+  /** [[LogQuery#printTo]]'s wave budget in compressed bytes for a driver
+    * that accepts at most `maxResultSize` bytes of task results per job
+    * (`spark.driver.maxResultSize`; 0 means no limit). A wave's sorted runs
+    * carry its decoded lines, so the budget is the limit divided by
+    * [[graft.boom.BoomSchemas.InflationBound]], and never more than
+    * [[DefaultHourSortMaxBytes]].
+    */
+  private[engine] def waveBudget(maxResultSize: Long): Long =
+    if (maxResultSize <= 0) DefaultHourSortMaxBytes
+    else math.min(DefaultHourSortMaxBytes, maxResultSize / BoomSchemas.InflationBound)
 
   /** Hour groups packed greedily, in order, into waves of at most
     * `maxBytes` (the groups' listed file sizes). Every wave holds at least
@@ -277,22 +297,25 @@ object LogQuery {
     }
   }
 
-  /** Quarantine + format stages, keeping the sort-key columns. */
-  private[engine] def format(df: DataFrame, dateFormat: String): DataFrame = {
-    val good = SortCols.map(col(_).isNotNull).reduce(_ && _)
-    df.filter(good)
-      .withColumn("formatted",
-        concat(format_log_date(col("timestamp"), dateFormat), lit(" "), col("message")))
-      .filter(col("formatted").isNotNull)
-  }
+  /** `conditions` + quarantine (one filter), then the format stage: the
+    * [[SortCols]] and `formatted`, rows with a null `formatted` dropped.
+    */
+  private[engine] def format(df: DataFrame, dateFormat: String,
+      conditions: Seq[Column] = Nil): DataFrame =
+    df.where((conditions ++ SortCols.map(col(_).isNotNull)).reduce(_ && _))
+      .select(SortCols.map(col) :+
+        concat(format_log_date(col("timestamp"), dateFormat), lit(" "), col("message"))
+          .as("formatted"): _*)
+      .where(col("formatted").isNotNull)
+
+  private def sortFormatted(formatted: DataFrame): DataFrame =
+    formatted.orderBy(SortCols.map(col): _*).select("formatted")
 
   /** The sort-and-format stage as a standalone transformation (usable on any
     * DataFrame with the LogLine columns).
     */
   def formatAndSort(df: DataFrame, dateFormat: String = "RFC5424"): DataFrame =
-    format(df, dateFormat)
-      .orderBy(SortCols.map(col): _*)
-      .select("formatted")
+    sortFormatted(format(df, dateFormat))
 
   /** Rows with null sort keys — the Pig `bad_data` split (formatAndSort.pg:24-38). */
   def badData(df: DataFrame): DataFrame =

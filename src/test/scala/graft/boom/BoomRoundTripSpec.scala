@@ -198,7 +198,6 @@ class BoomRoundTripSpec extends SparkTestBase {
   test("two-phase commit: task commit stages, job commit promotes, abort cleans all hours") {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.util.SerializableConfiguration
 
     def row(ts: Long) = new GenericInternalRow(
       Array[Any](ts, UTF8String.fromString("m"), 0, 0L, 0L, 1L))
@@ -209,7 +208,7 @@ class BoomRoundTripSpec extends SparkTestBase {
       if (root.exists()) walk(root).filter(_.getName.endsWith(suffix)) else Seq.empty
     }
 
-    val hconf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val hconf = spark.sessionState.newHadoopConf()
     val dir = Files.createTempDirectory("boom-2pc").toString
     val w = new BoomHourlyDataWriter(dir, "ingest", "", 0, 0L, hconf)
     w.write(row(0L)); w.write(row(3600000L)) // two hours → one mid-task roll

@@ -4,6 +4,7 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.Files
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import graft.SparkTestBase
@@ -27,14 +28,16 @@ class PrintToSpec extends SparkTestBase {
   private val t0 = java.time.Instant.parse("2024-03-01T10:00:00Z").toEpochMilli
   private val words = Seq("disk", "DISK", "Disk", "net", "cpu", "Straße", "fenêtre", "req", "ok")
 
-  /** `runs` ingest runs into one catalog, each spread over `hours` hours
-    * (the last hour `lastHourScale` times as dense). Timestamps sit on a
-    * 100 ms grid, so many are equal across files. The writer sets a file's
-    * createTime from its first line, so each run opens every hour on its
-    * own millisecond, before the grid: createTime then differs between files and the full
-    * sort key stays unique.
+  /** `runs` ingest runs into one catalog, each spread over `hours` hours of
+    * `perHour` lines (the last hour `lastHourScale` times as dense), each
+    * message ending in a random hex token of `tokenChars` characters.
+    * Timestamps sit on a 100 ms grid, so many are equal across files. The
+    * writer sets a file's createTime from its first line, so each run opens
+    * every hour on its own millisecond, before the grid: createTime then
+    * differs between files and the full sort key stays unique.
     */
-  private def catalog(seed: Long, runs: Int, hours: Int, lastHourScale: Int = 1): String = {
+  private def catalog(seed: Long, runs: Int, hours: Int, lastHourScale: Int = 1,
+      perHour: Int = 60, tokenChars: Int = 0): String = {
     val rnd = new Random(seed)
     val root = Files.createTempDirectory(s"printto-$seed").toString
     val fmt = java.time.format.DateTimeFormatter.ISO_INSTANT
@@ -42,10 +45,12 @@ class PrintToSpec extends SparkTestBase {
       val lines = ArrayBuffer[String]()
       (0 until hours).foreach { h =>
         lines += s"${fmt.format(java.time.Instant.ofEpochMilli(t0 + h * 3600000L + r))} r$r opens"
-        val n = if (h == hours - 1) 60 * lastHourScale else 60
+        val n = if (h == hours - 1) perHour * lastHourScale else perHour
         (0 until n).foreach { _ =>
           val ts = t0 + h * 3600000L + 100L * (1 + rnd.nextInt(300))
-          val msg = Seq.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.size))).mkString(" ")
+          val ws = Seq.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.size)))
+          val token = Seq.fill(tokenChars)(rnd.nextInt(16).toHexString).mkString
+          val msg = (ws ++ Option.when(tokenChars > 0)(token)).mkString(" ")
           lines += s"${fmt.format(java.time.Instant.ofEpochMilli(ts))} r$r $msg"
         }
       }
@@ -171,5 +176,53 @@ class PrintToSpec extends SparkTestBase {
     assert(n > 0)
     assert(jobs.get === 1)
     assert(tasks.get === inputPartitions)
+  }
+
+  test("the wave budget derived from maxResultSize keeps every job's results under it") {
+    val maxResultSize = 1L << 20
+    val root = catalog(seed = 31, runs = 2, hours = 6, perHour = 1000, tokenChars = 48)
+    val q = query(root, 6)
+    val budget = LogQuery.waveBudget(maxResultSize)
+    assert(budget === maxResultSize / graft.boom.BoomSchemas.InflationBound)
+    assert(LogQuery.waveBudget(0L) === LogQuery.DefaultHourSortMaxBytes)
+    assert(LogQuery.waveBudget(16L << 30) === LogQuery.DefaultHourSortMaxBytes)
+
+    val key = "graft.test.resultsize"
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val resultBytes = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null))
+          e.stageIds.foreach(stageJob.put(_, e.jobId))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(stageJob.get(e.stageId)).foreach { job =>
+          resultBytes.merge(job, e.taskMetrics.resultSize, _ + _)
+        }
+    }
+    /** Lines printed with `budget`, and each job's summed task result bytes. */
+    def run(budget: Long): (Seq[String], Seq[Long]) = {
+      val sc = spark.sparkContext
+      ListenerBusDrain(sc)
+      stageJob.clear(); resultBytes.clear()
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(key, "1")
+      val out = try printed(q, budget)
+        finally {
+          sc.setLocalProperty(key, null)
+          ListenerBusDrain(sc)
+          sc.removeSparkListener(listener)
+        }
+      (out, resultBytes.values().asScala.toSeq)
+    }
+
+    val (whole, wholeJobs) = run(LogQuery.DefaultHourSortMaxBytes)
+    assert(wholeJobs.size === 1)
+    assert(wholeJobs.head > maxResultSize,
+      s"one wave over the catalog must return more than $maxResultSize B")
+    val (waved, jobs) = run(budget)
+    assert(jobs.size > 1)
+    assert(jobs.forall(_ <= maxResultSize), jobs)
+    assert(waved === whole)
+    assert(whole === globalSort(q))
   }
 }
