@@ -41,43 +41,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE partition coalescing SIZES post-shuffle partitions instead of
-    // maximizing parallelism (guide §2.2): parallelismFirst=true (the
-    // Spark default) stops coalescing at minPartitionSize=1MB to keep
-    // `defaultParallelism` tasks alive, which leaves reduce tasks far
-    // below the advisory size — pure scheduling overhead at sf0.1 (graph
-    // queries ran 300-1000 near-empty tasks), quadratic shuffle block
-    // growth at cluster scale. The advisory default is DERIVED from the
-    // input footprint (r17, [[Tuning.advisoryBytes]]): the r16 constant
-    // `1m` was the measured sf0.1 optimum but scale-unsafe as a default;
-    // the derivation reproduces it exactly on the local fixtures and
-    // lands in the guide's band at cluster scale. Both knobs remain
-    // env-overridable.
-    val parallelismFirst =
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false")
-    val advisory = Tuning.advisoryBytes(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        parallelismFirst)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
-      // Let AQE coalesce the materialization of persisted frames too
-      // (default false keeps cached output partitioning fixed for reuse;
-      // nothing here relies on cached partitioning, and without it every
-      // persist site materializes at the raw shuffle-partition count).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_PLAN", "true"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        Tuning.objAggFallbackEntries)
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tuning.session(sfDir)
     // Warm up session machinery (parquet reader init, codegen compiler, JIT)
     // so the first timed query doesn't absorb one-time costs.
     spark.range(1000000L).selectExpr("sum(id)").collect()

@@ -1,8 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tool: dump `.explain("formatted")` for named
   * registered queries to `<outDir>/<query>_<tag>.txt` so plan-shape claims
   * (Exchange count, join strategy, PushedFilters/ReadSchema) are checkable
@@ -22,29 +20,7 @@ object Explain {
       else SparkEntry.queries.keys.toSeq.sorted
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        Tuning.advisoryBytes(sfDir, cpus.toInt))
-      // Let AQE coalesce the materialization of persisted frames too
-      // (default false keeps cached output partitioning fixed for reuse;
-      // nothing here relies on cached partitioning, and without it every
-      // persist site materializes at the raw shuffle-partition count).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_PLAN", "true"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        Tuning.objAggFallbackEntries)
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tuning.session(sfDir)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val out = Paths.get(s"$outDir/${name}_$tag.txt")

@@ -29,7 +29,7 @@ object SparkEntry {
     * PLAN memoization, not result caching: `spark.read.parquet` re-reads
     * the footer and re-resolves the relation on every call, which at one
     * bench sweep × 286 queries × 1-4 tables each is ~50-100 ms of pure
-    * driver analysis per query (measured, PhaseAudit r16) — a catalog
+    * driver analysis per query (measured as a driver phase, r16) — a catalog
     * table would be resolved once. Every execution still scans the
     * parquet from disk; nothing is persisted or collected here.
     */

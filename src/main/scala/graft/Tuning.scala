@@ -1,11 +1,52 @@
 package graft
 
-/** Session-conf derivation shared by the harness mains (Bench / Verify /
-  * Explain / PhaseAudit / ProfileAudit / StreamProfile — they build their
-  * sessions identically so correctness is always proven under the exact
-  * bench conf).
+import org.apache.spark.sql.SparkSession
+
+/** The harness session and the conf derivations behind it. Bench, Verify,
+  * Explain and Profile all build their session with [[session]], so
+  * correctness is proven, and plans and shuffle bytes are measured, under
+  * exactly the conf the bench times.
   */
 object Tuning {
+
+  /** The harness session: [[harnessConf]] on `local[$SPARK_GRAFT_CPUS]`
+    * (default 4), log level WARN.
+    */
+  def session(sfDir: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = SparkSession.builder().config(harnessConf(sfDir, cpus)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The harness conf for `cpus` local cores over the tables in `sfDir`.
+    *
+    * AQE partition coalescing SIZES post-shuffle partitions instead of
+    * maximizing parallelism (guide §2.2): `parallelismFirst=true` (the
+    * Spark default) stops coalescing at 1 MB to keep `defaultParallelism`
+    * tasks alive, which leaves reduce tasks far below the advisory size —
+    * pure scheduling overhead at sf0.1 (graph queries ran 300-1000
+    * near-empty tasks), quadratic shuffle-block growth at cluster scale.
+    * The advisory size is derived from the input ([[advisoryBytes]]).
+    * Cached-plan coalescing lets AQE coalesce the materialization of
+    * persisted frames too: nothing here relies on cached partitioning,
+    * and without it every persist site materializes at the raw
+    * shuffle-partition count. Each knob keeps its env override.
+    */
+  def harnessConf(sfDir: String, cpus: Int): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
+      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisoryBytes(sfDir, cpus),
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
+      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_PLAN", "true"),
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> objAggFallbackEntries,
+    "spark.sql.codegen.cache.maxEntries" -> codegenCacheEntries,
+    "spark.ui.enabled" -> "false")
 
   /** AQE advisory partition size: env-pinned, else DERIVED from the input
     * footprint so the default is scale-safe at both ends (r17; guide §2.2).
@@ -43,8 +84,9 @@ object Tuning {
     * the plan shape can't explain"). 8192 holds the whole surface
     * (generated classes are a few KB of bytecode each, so the cap is tens
     * of MB); a driver running a narrower mix just leaves capacity unused.
-    * Static conf — must be set at session build, which every harness main
-    * does. Env-overridable for deployments that want the Spark default.
+    * Static conf — must be set at session build, which [[session]] and
+    * the test session do. Env-overridable for deployments that want the
+    * Spark default.
     */
   def codegenCacheEntries: String =
     sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")

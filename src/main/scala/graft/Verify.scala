@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,32 +8,7 @@ object Verify {
     // iteration only; the driver passes two args) restrict the dump.
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] = if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Same AQE coalescing knobs as Bench (r16): correctness is verified
-      // under the exact conf the bench runs with, proving the size-based
-      // partition coalescing is result-invariant.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        Tuning.advisoryBytes(sfDir, cpus.toInt))
-      // Let AQE coalesce the materialization of persisted frames too
-      // (default false keeps cached output partitioning fixed for reuse;
-      // nothing here relies on cached partitioning, and without it every
-      // persist site materializes at the raw shuffle-partition count).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_PLAN", "true"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        Tuning.objAggFallbackEntries)
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tuning.session(sfDir)
     new java.io.File(outDir).mkdirs()
     // Belt to PlanInvariantsSpec's keyset-parity suspenders: a dumped
     // query with no oracle entry becomes an `err` row in the driver's

@@ -94,15 +94,6 @@ object Ingest {
       .sortWithinPartitions("timestamp", "createTime", "blockNumber", "lineNumber")
       .write.format("boom").option("boomMode", "reboom").mode(mode).save(outputDir)
 
-  /** Full catalog ingest — text (plain or `.gz`, Spark decompresses natively)
-    * → hour-partitioned Boom files laid out exactly where [[LogCatalog]] and
-    * the query tools expect them:
-    * `<root>/service/<dc>/<service>/logs/<yyyyMMdd>/<hh>/<component>/incoming/<runId>/part-*.bm`
-    *
-    * The hourly roll happens inside the boom writer (option `hourlyDirs`,
-    * the PigBoomHourlyRecordWriter analogue) — one narrow write pass, no
-    * per-hour driver loop, no extra shuffle beyond the within-partition sort.
-    */
   /** Materialize Boom logs as hour-partitioned Parquet — the analytics hand-
     * off (SURVEY §7.2 step 9): repeated aggregation/join workloads over the
     * same logs get columnar vectorized scans, min/max pruning, and
@@ -164,6 +155,15 @@ object Ingest {
       .mode(saveMode).parquet(parquetDir)
   }
 
+  /** Full catalog ingest — text (plain or `.gz`, Spark decompresses natively)
+    * → hour-partitioned Boom files laid out exactly where [[LogCatalog]] and
+    * the query tools expect them:
+    * `<root>/service/<dc>/<service>/logs/<yyyyMMdd>/<hh>/<component>/incoming/<runId>/part-*.bm`
+    *
+    * The hourly roll happens inside the boom writer (option `hourlyDirs`,
+    * the PigBoomHourlyRecordWriter analogue) — one narrow write pass, no
+    * per-hour driver loop, no extra shuffle beyond the within-partition sort.
+    */
   def textToCatalog(
       spark: SparkSession,
       inputPath: String,

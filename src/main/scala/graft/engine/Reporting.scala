@@ -349,7 +349,7 @@ object Reporting {
     * integer bytes below 1 KB, two decimals at each 1024 tier above.
     */
   def formatByteSize(byteSize: Double): String = {
-    // Locale.ROOT pinned (like Bench/ShuffleAudit/LogDateFormat): the
+    // Locale.ROOT pinned (like Bench/LogDateFormat): the
     // f-interpolator uses the JVM default locale, and a decimal-comma or
     // non-ASCII-digit locale would silently change rendered reports.
     def f2(v: Double, unit: String): String =

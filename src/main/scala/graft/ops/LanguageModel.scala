@@ -485,7 +485,7 @@ object LanguageModel {
     // O(vocabSize²) nodes (the `idx` subtree — itself vocabSize copies of
     // the md5 draw — repeats inside every when-branch): ~1 s of
     // construction + 0.5 s of analysis per run at vocabSize = 50
-    // (PhaseAudit, r16). Staged, each subtree appears once and
+    // (driver-phase profile, r16). Staged, each subtree appears once and
     // CollapseProject keeps the projections separate (non-cheap exprs
     // with >1 consumer are never inlined back), so codegen evaluates the
     // draw and the rank once per row into local variables. Any

@@ -310,7 +310,7 @@ object Stats {
     // expressions: inlined, every `sum(w)`/`sum(w·v)` pair re-embeds the
     // 9-step CDF ladder and its md5 draw, an O(replicates × ladder ×
     // draw)-node tree (~6K nodes at 32 replicates) that cost ~1.3 s of
-    // planning+codegen per run (PhaseAudit, r16). Staged, each draw and
+    // planning+codegen per run (driver-phase profile, r16). Staged, each draw and
     // ladder appears once, CollapseProject keeps the projections separate
     // (non-cheap exprs with >1 consumer), and the aggregate sums plain
     // attributes — map-side partial aggregation unchanged.

@@ -71,7 +71,7 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("shuffle-byte budgets: the heaviest queries stay within 3x recorded bytes (sf0.01)") {
-    // ShuffleAudit measures; this asserts. The map records each query's
+    // Profile measures; this asserts. The map records each query's
     // shuffle WRITE megabytes from the r16 full-surface audit at sf0.01
     // (the 10 heaviest of 284) — the ceiling is a generous 3×, so a plan
     // regression (lost pushdown, new exchange, broadcast fallen back to
@@ -91,7 +91,7 @@ class PlanAuditSpec extends SparkTestBase {
       "q_bitext_mine_lsh" -> 0.6)
     val dir = "/root/testdata/sf0.01"
     val over = recordedWriteMb.toSeq.sortBy(_._1).flatMap { case (name, mb) =>
-      val (w, _) = ShuffleAudit.measure(spark) {
+      val (w, _) = Profile.measure(spark) {
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
       }

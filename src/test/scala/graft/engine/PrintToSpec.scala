@@ -10,7 +10,7 @@ import scala.util.Random
 import graft.SparkTestBase
 import graft.cli.LogToolCli
 
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.countDistinct
