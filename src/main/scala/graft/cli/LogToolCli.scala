@@ -1,5 +1,7 @@
 package graft.cli
 
+import java.io.BufferedOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
@@ -33,9 +35,13 @@ import org.apache.spark.sql.SparkSession
   * The catalog root defaults to `/` (i.e. paths like `/service/<dc>/...`) and
   * can be overridden with `--root=` or `GRAFT_LOG_ROOT`.
   *
-  * NOTE: on hosts with a POSIX locale, run under `LANG=C.UTF-8` (or any UTF-8
-  * locale) — JVM argv decoding (`sun.jnu.encoding`) is fixed before `-D`
-  * flags apply, and non-ASCII search terms arrive mangled otherwise.
+  * Stdout carries the result lines as raw UTF-8 bytes whatever the locale,
+  * as the reference copied its UTF-8 output files to the terminal.
+  *
+  * NOTE: on hosts with a POSIX locale, still run under `LANG=C.UTF-8` (or
+  * any UTF-8 locale) — JVM argv decoding (`sun.jnu.encoding`) is fixed
+  * before `-D` flags apply, and non-ASCII search terms arrive mangled
+  * otherwise.
   */
 object LogToolCli {
 
@@ -192,6 +198,8 @@ object LogToolCli {
     case _ => s";$tool failed: ${translateError(e)}"
   }
 
+  private val DataMarker = ";#### DATA RESULTS ####\n".getBytes(UTF_8)
+
   /** [[run]] minus session lifecycle and exit-code handling — callable on
     * an existing session (tests, embedding); errors propagate, a bad
     * command line as a [[UsageError]].
@@ -208,9 +216,15 @@ object LogToolCli {
       q.formatted(spark).write.mode("overwrite").text(a.out)
       if (!a.silent) System.err.println(s";Results written to ${a.out}")
     } else {
-      println(";#### DATA RESULTS ####")
-      val n = q.printTo(spark, println)
-      println(";#### DATA RESULTS ####")
+      // One buffered stream, flushed once: an autoflushing stdout would
+      // otherwise take one write per line.
+      val out = new BufferedOutputStream(Console.out, 1 << 16)
+      val n = try {
+        out.write(DataMarker)
+        val lines = q.writeTo(spark, out)
+        out.write(DataMarker)
+        lines
+      } finally out.flush()
       if (!a.silent) System.err.println(s";$n results")
     }
   }

@@ -1,5 +1,8 @@
 package graft.engine
 
+import java.io.{ByteArrayOutputStream, OutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.boom.BoomSchemas
 import graft.core.LogLine
 import graft.functions.functions.format_log_date
@@ -11,9 +14,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
-/** The whole query pipeline of the reference's four CLI tools as ONE declarative
-  * Spark plan — scan → time filter → content predicate → date-format projection
-  * → global sort → single output column — replacing the reference's two-stage
+/** The whole query pipeline of the reference's four CLI tools as
+  * declarative Spark plans — scan → time filter → content predicate →
+  * date-format projection → sort — replacing the reference's two-stage
   * MapReduce-scan + Pig-sort architecture (logtools/LogTools.java:196-510,
   * pig/formatAndSort.pg).
   *
@@ -21,13 +24,18 @@ import org.apache.spark.sql.functions._
   * LogQuery(root = "/srv", dc = "99", service = "svc", component = "comp")
   *   .range(startMs, endMs)
   *   .where(Search("needle", caseInsensitive = true))
-  *   .formatted(spark)          // ordered Dataset of final formatted lines
+  *   .printTo(spark, println)   // formatted lines in output order
   * }}}
   *
   * Catalyst handles what the reference hand-built: the time filter and
   * substring predicates push into the boom scan (block skip + during-decode
-  * test), the final `orderBy` is a range-partitioned sort (Pig's sampled
-  * ORDER BY), and everything before it is shuffle-free narrow work.
+  * test), and everything up to the sort is shuffle-free narrow work. The
+  * sort depends on the sink. Stdout ([[writeTo]], [[printTo]]) sorts each
+  * scan partition on its own and k-way merges the sorted runs on the
+  * driver, each line staying the UTF-8 bytes its executor formatted.
+  * [[formatted]] (the CLI's `--out`) sorts each catalog hour in one
+  * partition and concatenates the hours; explicit paths take a
+  * range-partitioned global sort (Pig's sampled ORDER BY).
   */
 case class LogQuery(
     root: String = "",
@@ -159,8 +167,9 @@ case class LogQuery(
         .select("formatted")
   }
 
-  /** Formatted lines in output order, handed to `out` one at a time — the
-    * logcat-to-stdout path. Returns the number of lines.
+  /** Formatted lines in output order, handed to `out` one at a time.
+    * Returns the number of lines. A decoding adapter over [[writeTo]]'s
+    * byte path, which the CLI's stdout takes.
     *
     * CATALOG queries pack consecutive hours into waves of at most
     * [[LogQuery.waveBudget]] compressed bytes, which keeps a wave's
@@ -175,22 +184,35 @@ case class LogQuery(
     * sort one partition at a time instead.
     */
   def printTo(spark: SparkSession, out: String => Unit): Long =
+    printLines(spark, (b, off, len) => out(new String(b, off, len, UTF_8)))
+
+  /** [[printTo]]'s lines as UTF-8, each followed by `'\n'`, written to
+    * `out` without flushing it — the logcat-to-stdout path. The lines stay
+    * the bytes the executors formatted, from the sorted run to `out`.
+    */
+  def writeTo(spark: SparkSession, out: OutputStream): Long =
+    printLines(spark, (b, off, len) => { out.write(b, off, len); out.write('\n') })
+
+  private def printLines(spark: SparkSession, out: LogQuery.LineSink): Long =
     printInWaves(spark, out, LogQuery.waveBudget(
       spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")))
 
   /** [[printTo]] with the wave budget as a parameter (a test seam). */
-  private[engine] def printInWaves(spark: SparkSession, out: String => Unit,
+  private[engine] def printInWaves(spark: SparkSession, out: LogQuery.LineSink,
       maxWaveBytes: Long): Long = {
     import spark.implicits._
     var n = 0L
-    def emit(s: String): Unit = { out(s); n += 1 }
-    def stream(ds: Dataset[String]): Unit = ds.toLocalIterator().forEachRemaining(emit(_))
+    def stream(ds: Dataset[String]): Unit = ds.toLocalIterator().forEachRemaining { s =>
+      val b = s.getBytes(UTF_8)
+      out(b, 0, b.length)
+      n += 1
+    }
     if (paths.nonEmpty) stream(formatted(spark))
     else LogQuery.waves(resolveHourGroups(spark), maxWaveBytes).foreach { wave =>
       val files = wave.map(_._1)
       if (wave.map(_._2).sum > maxWaveBytes)
         stream(hourBranch(spark, files, rangeSort = true).as[String])
-      else LogQuery.merge(sortedRuns(spark, files), emit)
+      else n += LogQuery.merge(sortedRuns(spark, files), out)
     }
     n
   }
@@ -254,28 +276,46 @@ object LogQuery {
     out.toSeq
   }
 
-  /** One partition's lines in [[SortCols]] order: `keys` holds the four
-    * sort-key longs of line `i` at `4 * i` until `4 * i + 3`.
+  /** Receives one output line as a UTF-8 slice, without its newline. */
+  private[engine] trait LineSink {
+    def apply(bytes: Array[Byte], off: Int, len: Int): Unit
+  }
+
+  /** One partition's lines in [[SortCols]] order, as three primitive
+    * arrays, so a task result serializes without per-line work: `keys`
+    * holds the four sort-key longs of line `i` at `4 * i` until
+    * `4 * i + 3`, and its UTF-8 text is `bytes` from `start(i)` until
+    * `ends(i)`.
     */
-  private[engine] final class SortedRun(val keys: Array[Long], val lines: Array[String])
-      extends Serializable
+  private[engine] final class SortedRun(val keys: Array[Long], val bytes: Array[Byte],
+      val ends: Array[Int]) extends Serializable {
+    def size: Int = ends.length
+    def start(i: Int): Int = if (i == 0) 0 else ends(i - 1)
+  }
 
   private[engine] object SortedRun {
-    /** Reads rows of (SortCols..., formatted). */
+    /** Reads rows of (SortCols..., formatted), copying each formatted
+      * line's bytes as they are.
+      */
     def apply(rows: Iterator[InternalRow]): SortedRun = {
       val keys = new ArrayBuilder.ofLong
-      val lines = new ArrayBuilder.ofRef[String]
+      val text = new ByteArrayOutputStream(1 << 12)
+      val ends = new ArrayBuilder.ofInt
+      // `addOne`, not `+=`: the generic `+=` boxes every element.
       rows.foreach { r =>
         var i = 0
-        while (i < 4) { keys += r.getLong(i); i += 1 }
-        lines += r.getUTF8String(4).toString
+        while (i < 4) { keys.addOne(r.getLong(i)); i += 1 }
+        r.getUTF8String(4).writeTo(text)
+        ends.addOne(text.size)
       }
-      new SortedRun(keys.result(), lines.result())
+      new SortedRun(keys.result(), text.toByteArray, ends.result())
     }
   }
 
-  /** Streaming k-way merge of sorted runs on (SortCols, run index). */
-  private[engine] def merge(runs: Array[SortedRun], out: String => Unit): Unit = {
+  /** Streaming k-way merge of sorted runs on (SortCols, run index).
+    * Returns the number of lines.
+    */
+  private[engine] def merge(runs: Array[SortedRun], out: LineSink): Long = {
     val pos = new Array[Int](runs.length)
     def compare(a: Int, b: Int): Int = {
       val ka = runs(a).keys; val kb = runs(b).keys
@@ -288,13 +328,19 @@ object LogQuery {
     }
     val heap = new java.util.PriorityQueue[Integer](math.max(1, runs.length),
       (a: Integer, b: Integer) => compare(a, b))
-    runs.indices.foreach(r => if (runs(r).lines.nonEmpty) heap.add(r))
+    runs.indices.foreach(r => if (runs(r).size > 0) heap.add(r))
+    var n = 0L
     while (!heap.isEmpty) {
       val r: Int = heap.poll()
-      out(runs(r).lines(pos(r)))
-      pos(r) += 1
-      if (pos(r) < runs(r).lines.length) heap.add(r)
+      val run = runs(r)
+      val i = pos(r)
+      val from = run.start(i)
+      out(run.bytes, from, run.ends(i) - from)
+      pos(r) = i + 1
+      if (pos(r) < run.size) heap.add(r)
+      n += 1
     }
+    n
   }
 
   /** `conditions` + quarantine (one filter), then the format stage: the

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen-friendly epoch-millis → formatted-string expression backing
   * `format_log_date`. Equivalent of the reference's Pig `DateFormatter`
@@ -24,13 +23,11 @@ case class FormatLogDate(child: Expression, formatName: String, zoneId: String)
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "format_log_date"
 
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(fmt.format(input.asInstanceOf[Long]))
+  override def nullSafeEval(input: Any): Any = fmt.formatUtf8(input.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val fmtRef = ctx.addReferenceObj("logDateFmt", fmt, classOf[LogDateFormat].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString($fmtRef.format($c))")
+    defineCodeGen(ctx, ev, c => s"$fmtRef.formatUtf8($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): FormatLogDate =

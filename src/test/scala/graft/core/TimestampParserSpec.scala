@@ -1,7 +1,20 @@
 package graft.core
 
-import java.time.{LocalDateTime, ZoneOffset}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.time.format.DateTimeFormatter
+import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
+import java.util.Locale
 
+import scala.util.Random
+
+import graft.functions.FormatLogDate
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.types.LongType
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 class TimestampParserSpec extends AnyFunSuite {
@@ -109,5 +122,59 @@ class LogDateFormatSpec extends AnyFunSuite {
 
   test("millisecond rendering") {
     assert(LogDateFormat("RFC5424").format(ts + 557) === "2012-02-28T10:00:01.557+00:00")
+  }
+
+  test("patterns format per second, around SSS, or per call") {
+    def plan(f: String) =
+      LogDateFormat.secondPattern(LogDateFormat.translatePattern(LogDateFormat.resolvePattern(f)))
+    assert(plan("RFC5424") === Some(("yyyy-MM-dd'T'HH:mm:ss.\uFFFFxxx", true)))
+    assert(plan("'SSS' ss.SSS") === Some(("'SSS' ss.\uFFFF", true)))
+    assert(plan("RFC3164") === Some(("MMM dd HH:mm:ss", false)))
+    assert(plan("RFC822_SEC_UTC").map(_._2) === Some(false))
+    Seq("ss.SS", "ss.SSSSSS", "ss.SSS SSS", "HH:mm:ss.n", "A", "N", "ppss.SSS",
+      "HH:mm:ss[.SSS]")
+      .foreach(f => assert(plan(f) === None, f))
+  }
+
+  test("the per-second memo formats like java.time, in time order and shuffled") {
+    val formats = Seq("RFC822", "RFC822_SEC_UTC", "RFC3164", "RFC5424", "yyyy/MM/dd HH:mm",
+      "MMM dd HH:mm:ss.SSS", "HH:mm:ss.SSS'Z'", "'SSS' ss.SSS", "ss.SS", "ss.SSSSSS",
+      "HH:mm:ss.n")
+    val zones = Seq("UTC", "America/New_York", "Asia/Kolkata", "Australia/Lord_Howe")
+    val anchors = Seq(
+      "2021-03-14T07:00:00Z", "2021-11-07T06:00:00Z", // New York: spring forward, fall back
+      "2021-04-03T15:00:00Z", "2021-10-02T15:30:00Z", // Lord Howe: 30 minutes back, forward
+      "1970-01-01T00:00:00Z", "1942-05-14T18:30:00Z", "1969-07-20T20:17:40Z")
+      .map(Instant.parse(_).toEpochMilli)
+    // A walk from up to an hour before an anchor: mostly steps within a
+    // second (the memo's hit path), some across seconds, a few of hours.
+    val genWalk: Gen[Seq[Long]] = for {
+      anchor <- Gen.oneOf(anchors)
+      back <- Gen.choose(0L, 3600000L)
+      steps <- Gen.listOfN(300, Gen.frequency(
+        6 -> Gen.choose(0L, 40L), 3 -> Gen.choose(0L, 1500L), 1 -> Gen.choose(0L, 3600000L)))
+    } yield steps.scanLeft(anchor - back)(_ + _)
+
+    var seed = 7L
+    for (f <- formats; z <- zones) {
+      seed += 1
+      val inOrder = genWalk.apply(Gen.Parameters.default, Seed(seed)).get
+      val values = inOrder ++ new Random(seed).shuffle(inOrder)
+      val fresh = DateTimeFormatter.ofPattern(
+        LogDateFormat.translatePattern(LogDateFormat.resolvePattern(f)), Locale.ROOT)
+        .withZone(ZoneId.of(z))
+      val fmt = LogDateFormat(f, z)
+      val expr = FormatLogDate(BoundReference(0, LongType, nullable = false), f, z)
+      val compiled = GenerateUnsafeProjection.generate(
+        Seq(FormatLogDate(BoundReference(0, LongType, nullable = false), f, z)))
+      values.foreach { ms =>
+        val want = fresh.format(Instant.ofEpochMilli(ms))
+        val clue = s"$f @ $z, $ms"
+        assert(fmt.format(ms) === want, clue)
+        assert(fmt.formatUtf8(ms).getBytes.sameElements(want.getBytes(UTF_8)), clue)
+        assert(expr.eval(InternalRow(ms)).toString === want, s"interpreted $clue")
+        assert(compiled(InternalRow(ms)).getUTF8String(0).toString === want, s"codegen $clue")
+      }
+    }
   }
 }

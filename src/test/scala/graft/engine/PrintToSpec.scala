@@ -37,7 +37,7 @@ class PrintToSpec extends SparkTestBase {
     * differs between files and the full sort key stays unique.
     */
   private def catalog(seed: Long, runs: Int, hours: Int, lastHourScale: Int = 1,
-      perHour: Int = 60, tokenChars: Int = 0): String = {
+      perHour: Int = 60, tokenChars: Int = 0, vocab: Seq[String] = words): String = {
     val rnd = new Random(seed)
     val root = Files.createTempDirectory(s"printto-$seed").toString
     val fmt = java.time.format.DateTimeFormatter.ISO_INSTANT
@@ -48,7 +48,7 @@ class PrintToSpec extends SparkTestBase {
         val n = if (h == hours - 1) perHour * lastHourScale else perHour
         (0 until n).foreach { _ =>
           val ts = t0 + h * 3600000L + 100L * (1 + rnd.nextInt(300))
-          val ws = Seq.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.size)))
+          val ws = Seq.fill(1 + rnd.nextInt(3))(vocab(rnd.nextInt(vocab.size)))
           val token = Seq.fill(tokenChars)(rnd.nextInt(16).toHexString).mkString
           val msg = (ws ++ Option.when(tokenChars > 0)(token)).mkString(" ")
           lines += s"${fmt.format(java.time.Instant.ofEpochMilli(ts))} r$r $msg"
@@ -75,7 +75,7 @@ class PrintToSpec extends SparkTestBase {
 
   private def printed(q: LogQuery, budget: Long): Seq[String] = {
     val out = ArrayBuffer[String]()
-    val n = q.printInWaves(spark, out += _, budget)
+    val n = q.printInWaves(spark, (b, off, len) => out += new String(b, off, len, "UTF-8"), budget)
     assert(n === out.size)
     out.toSeq
   }
@@ -115,6 +115,50 @@ class PrintToSpec extends SparkTestBase {
     }
   }
 
+  test("stdout carries each line's UTF-8 bytes exactly, whatever the stream's charset") {
+    // 2-, 3- and 4-byte characters, each also a line's last word.
+    val vocab = words ++ Seq("é", "日本語", "✓", "😀", "x😀y")
+    val root = catalog(seed = 41, runs = 2, hours = 2, vocab = vocab)
+    val q = query(root, 2)
+    val expected = globalSort(q)
+    Seq("é", "日本語", "✓", "😀").foreach { c =>
+      assert(expected.exists(_.endsWith(c)), s"the fixture must end a line with $c")
+    }
+    val argv = Array(s"--root=$root", s"-dc=$Dc", s"-svc=$Svc", s"-comp=$Comp",
+      s"-start=${q.startMs}", s"-end=${q.endMs}", "--silent")
+    val buf = new ByteArrayOutputStream()
+    // A Latin-1 stream would turn every character above into '?' if the
+    // lines went through it as text.
+    Console.withOut(new PrintStream(buf, true, "ISO-8859-1")) {
+      LogToolCli.runWith(spark, "logcat", argv, _ => MatchAll)
+    }
+    val marker = ";#### DATA RESULTS ####"
+    val want = (marker +: expected :+ marker).mkString("", "\n", "\n").getBytes("UTF-8")
+    assert(buf.toByteArray.sameElements(want))
+
+    val decoded = ArrayBuffer[String]()
+    assert(q.printTo(spark, decoded += _) === expected.size)
+    assert(decoded.toSeq === expected)
+  }
+
+  test("stdout takes one write per buffer, not one per line, on an autoflushing stream") {
+    val root = catalog(seed = 43, runs = 2, hours = 2, perHour = 5000)
+    val q = query(root, 2)
+    var writes = 0
+    var bytes = 0L
+    val counting = new java.io.OutputStream {
+      override def write(b: Int): Unit = { writes += 1; bytes += 1 }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = { writes += 1; bytes += len }
+    }
+    val argv = Array(s"--root=$root", s"-dc=$Dc", s"-svc=$Svc", s"-comp=$Comp",
+      s"-start=${q.startMs}", s"-end=${q.endMs}", "--silent")
+    Console.withOut(new PrintStream(counting, true, "UTF-8")) {
+      LogToolCli.runWith(spark, "logcat", argv, _ => MatchAll)
+    }
+    assert(q.lines(spark).count() >= 20000)
+    assert(writes <= bytes / 8192 + 4, s"$writes writes for $bytes bytes")
+  }
+
   test("forced wave splits and over-budget hours keep the global order") {
     val root = catalog(seed = 23, runs = 2, hours = 3, lastHourScale = 8)
     val q = query(root, 3)
@@ -140,6 +184,12 @@ class PrintToSpec extends SparkTestBase {
       assert(printed(q, budget) === expected, s"budget $budget")
       assert(printed(searched, budget) === expectedSearch, s"budget $budget, search")
     }
+  }
+
+  test("a sorted run holds its lines in primitive arrays, not strings") {
+    val fields = classOf[LogQuery.SortedRun].getDeclaredFields.map(_.getType)
+    assert(fields.toSet === Set[Class[_]](classOf[Array[Long]], classOf[Array[Byte]],
+      classOf[Array[Int]]))
   }
 
   test("a 2-hour printTo runs one job with one task per scan partition") {
