@@ -76,8 +76,8 @@ object SparkEntry {
     * runs the projection exactly once and sorts trivially. The queries keep
     * a deterministic TOTAL order (class doc), so the output sequence is
     * identical to `orderBy`'s. Genuinely large ordered output (the
-    * formatted log stream) keeps its range sort / exchange-free hour path
-    * (LogQuery.formattedByHour) — this helper is presentation-only.
+    * formatted log stream) keeps its range sort or merged sorted runs
+    * (LogQuery.formatted / printTo) — this helper is presentation-only.
     */
   private implicit class PresentationOrder(private val df: DataFrame) {
     def presented(c0: String, cs: String*): DataFrame =

@@ -1,11 +1,8 @@
 package graft.boom
 
-import java.io.InputStream
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.avro.Schema
-import org.apache.avro.file.DataFileStream
 import org.apache.avro.io.{DatumReader, Decoder, DecoderFactory}
 import org.apache.avro.util.Utf8
 import org.apache.spark.unsafe.types.UTF8String
@@ -361,36 +358,6 @@ final class BoomBlockDatumReader(pushdown: BoomPushdown)
     case Schema.Type.FIXED => in.skipFixed(s.getFixedSize)
     case other => throw new UnsupportedOperationException(s"Cannot skip $other in Boom file")
   }
-}
-
-/** Flat iterator of surviving [[BoomLine]]s over one Boom file stream
-  * (non-seekable; used by the local `boomcat` path — the task read path is
-  * [[BoomFileRangeIterator]]).
-  */
-final class BoomFileIterator(input: InputStream, pushdown: BoomPushdown)
-    extends Iterator[BoomLine] with AutoCloseable {
-
-  private val stream =
-    new DataFileStream[ArrayBuffer[BoomLine]](input, new BoomBlockDatumReader(pushdown))
-  private var buffer: ArrayBuffer[BoomLine] = new ArrayBuffer[BoomLine]
-  private var pos = 0
-
-  override def hasNext: Boolean = {
-    while (pos >= buffer.length && stream.hasNext) {
-      buffer = stream.next(buffer)
-      pos = 0
-    }
-    pos < buffer.length
-  }
-
-  override def next(): BoomLine = {
-    if (!hasNext) throw new NoSuchElementException
-    val l = buffer(pos)
-    pos += 1
-    l
-  }
-
-  override def close(): Unit = stream.close()
 }
 
 /** Iterator over one byte-range slice of a Boom file, reading the Avro

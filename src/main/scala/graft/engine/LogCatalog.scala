@@ -56,12 +56,10 @@ object LogCatalog {
 
   /** Concrete existing file paths with their byte lengths, grouped per
     * hour partition in ascending hour order (empty hour groups dropped).
-    * The grouping is what makes the exchange-free ordered-concat read
-    * possible: hour buckets are time-disjoint by layout, so per-bucket
-    * sorted partitions concatenate into global order. The per-hour byte
-    * totals (free — the listing already returns them) let the
-    * ordered-concat reader route OVERSIZED hours to the range sort instead
-    * of a single-task sort ([[LogQuery.formattedByHour]]).
+    * Hour buckets are time-disjoint by layout, so [[LogQuery#printTo]]
+    * packs whole groups into waves whose merged outputs concatenate into
+    * global order, and sizes each wave by its groups' byte totals (free —
+    * the listing already returns them).
     */
   def resolveByHourWithSizes(
       conf: Configuration,

@@ -3,7 +3,7 @@ package graft.engine
 import java.io.{ByteArrayOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.boom.BoomSchemas
+import graft.boom.{BoomDataSource, BoomSchemas}
 import graft.core.LogLine
 import graft.functions.functions.format_log_date
 
@@ -30,12 +30,12 @@ import org.apache.spark.sql.functions._
   * Catalyst handles what the reference hand-built: the time filter and
   * substring predicates push into the boom scan (block skip + during-decode
   * test), and everything up to the sort is shuffle-free narrow work. The
-  * sort depends on the sink. Stdout ([[writeTo]], [[printTo]]) sorts each
-  * scan partition on its own and k-way merges the sorted runs on the
-  * driver, each line staying the UTF-8 bytes its executor formatted.
-  * [[formatted]] (the CLI's `--out`) sorts each catalog hour in one
-  * partition and concatenates the hours; explicit paths take a
-  * range-partitioned global sort (Pig's sampled ORDER BY).
+  * sort is Pig's ORDER BY, in one of two forms. Stdout ([[writeTo]],
+  * [[printTo]]) sorts each scan partition on its own and k-way merges the
+  * sorted runs on the driver, each line staying the UTF-8 bytes its
+  * executor formatted, when a wave of input fits the driver's budget.
+  * Everything else, [[formatted]] (the CLI's `--out`) included, takes the
+  * range-partitioned global sort.
   */
 case class LogQuery(
     root: String = "",
@@ -51,14 +51,11 @@ case class LogQuery(
   def range(start: Long, end: Long): LogQuery = copy(startMs = start, endMs = end)
   def where(p: LogPredicate): LogQuery = copy(predicate = p)
 
-  def resolvePaths(spark: SparkSession): Seq[String] = {
-    if (paths.nonEmpty) return paths
-    // Derived from the memoized hour groups: the CLI drivers print a file
-    // count and then run the query on the SAME instance — two independent
-    // listings would glob every hour directory twice against the
-    // filesystem/namenode (hundreds of calls on a multi-day range).
+  /** The query's input files: each catalog hour's files in hour order, or
+    * every file under the explicit `paths`.
+    */
+  def resolvePaths(spark: SparkSession): Seq[String] =
     resolveHourGroups(spark).flatten.map(_._1)
-  }
 
   /** The filtered log-line table (time range + content predicate applied). */
   def lines(spark: SparkSession): Dataset[LogLine] = {
@@ -87,101 +84,55 @@ case class LogQuery(
 
   /** Pig formatAndSort stage (pig/formatAndSort.pg:24-47): quarantine rows
     * with null sort keys, project `CONCAT(DateFormatter(time), ' ', message)`,
-    * drop null-formatted rows, ORDER BY the canonical key, keep only the
-    * formatted column.
-    *
-    * CATALOG queries (the CLI's `--out` path; stdout goes through
-    * [[printTo]]) skip the global sort's range-sampling pass + shuffle
-    * entirely: each hour bucket is read into one partition and sorted
-    * within it, buckets concatenated in hour order ([[formattedByHour]]) —
-    * no Exchange anywhere in the plan. The catalog layout guarantees an
-    * hour directory only holds that hour's lines (fs/PathInfo.java:21-86),
-    * which is what makes the concatenation a correct global order. Explicit-path queries (no layout guarantee)
-    * use the range-partitioned global sort.
+    * drop null-formatted rows, ORDER BY the canonical key (a
+    * range-partitioned sort), keep only the formatted column.
     */
   def formatted(spark: SparkSession): Dataset[String] = {
     import spark.implicits._
-    if (paths.isEmpty) formattedByHour(spark)
-    else LogQuery.formatAndSort(lines(spark).toDF(), dateFormat).as[String]
+    LogQuery.formatAndSort(lines(spark).toDF(), dateFormat).as[String]
   }
 
-  /** Ordered logcat output with NO Exchange for normally-sized hours: one
-    * sorted partition per catalog hour, concatenated in hour order. Correct
-    * global order relies on the layout invariant that an hour directory
-    * only holds lines of that hour (fs/PathInfo.java:21-86 — the uploaders
-    * and the hourly writer both guarantee it); data violating it would sort
-    * within the wrong bucket. This is [[formatted]]'s default for catalog
-    * queries. The hour branches are NOT one task each: Spark plans the union
-    * of single-partition branches as one output partition
-    * (`spark.sql.unionOutputPartitioning`), so writing this Dataset (the
-    * CLI's `--out`) runs the whole window in one task. [[printTo]] does not
-    * read through here; it merges parallel sorted runs instead.
-    *
-    * OVERSIZED hours route themselves to the range sort automatically: the
-    * catalog listing's file sizes (free — the same globStatus pass) total
-    * per hour, and an hour past `maxHourBytes` becomes a range-partitioned
-    * intra-hour global sort instead of one giant single-task sort. The
-    * concatenation stays a correct global order either way — a range sort's
-    * output partitions are themselves in key order, so unioning them
-    * between the neighbouring hours' single partitions preserves it.
-    */
-  def formattedByHour(
-      spark: SparkSession,
-      maxHourBytes: Long = LogQuery.DefaultHourSortMaxBytes): Dataset[String] = {
-    import spark.implicits._
-    val hourGroups = resolveHourGroups(spark)
-    if (hourGroups.isEmpty) spark.emptyDataset[String]
-    else hourGroups.map { files =>
-      hourBranch(spark, files.map(_._1),
-        rangeSort = files.map(_._2).sum > maxHourBytes)
-    }.reduce(_ unionByName _).as[String]
-  }
-
-  // Memoized per query instance (the CLI count + the query itself share
-  // one catalog pass). The cache assumes the catalog doesn't change
-  // between the two calls of one run — the same assumption the two-pass
-  // version silently made, minus the second listing.
+  // Memoized per query instance: the CLI prints a file count and then runs
+  // the query on the SAME instance, so the two share one listing. The cache
+  // assumes the files don't change between the two calls of one run.
   @transient private var hourGroupsCache: Seq[Seq[(String, Long)]] = _
 
+  /** The input files with their sizes: one group per catalog hour, in hour
+    * order, or ONE group of every file under explicit `paths`, listed by
+    * the scan's own rule. No group is empty.
+    */
   private def resolveHourGroups(spark: SparkSession): Seq[Seq[(String, Long)]] = {
     if (hourGroupsCache != null) return hourGroupsCache
-    require(startMs != Long.MinValue && endMs != Long.MaxValue,
-      "catalog-based queries need a bounded time range: call .range(startMs, endMs) " +
-        "or read explicit paths with LogQuery(paths = ...)")
-    hourGroupsCache = LogCatalog.resolveByHourWithSizes(
-      spark.sessionState.newHadoopConf(), root, dc, service, component, startMs, endMs)
+    val conf = spark.sessionState.newHadoopConf()
+    hourGroupsCache =
+      if (paths.nonEmpty)
+        Seq(BoomDataSource.listFiles(conf, paths).map(s => (s.getPath.toString, s.getLen)))
+          .filter(_.nonEmpty)
+      else {
+        require(startMs != Long.MinValue && endMs != Long.MaxValue,
+          "catalog-based queries need a bounded time range: call .range(startMs, endMs) " +
+            "or read explicit paths with LogQuery(paths = ...)")
+        LogCatalog.resolveByHourWithSizes(conf, root, dc, service, component, startMs, endMs)
+      }
     hourGroupsCache
-  }
-
-  /** One hour bucket → filtered, formatted, sorted. Normal hours sort in a
-    * single coalesced partition (exchange-free); an hour flagged oversized
-    * by the catalog byte total takes the range-partitioned sort instead.
-    */
-  private def hourBranch(spark: SparkSession, files: Seq[String],
-      rangeSort: Boolean): DataFrame = {
-    val df = formattedRows(spark, files)
-    if (rangeSort) LogQuery.sortFormatted(df)
-    else
-      df.coalesce(1)
-        .sortWithinPartitions(LogQuery.SortCols.map(col): _*)
-        .select("formatted")
   }
 
   /** Formatted lines in output order, handed to `out` one at a time.
     * Returns the number of lines. A decoding adapter over [[writeTo]]'s
     * byte path, which the CLI's stdout takes.
     *
-    * CATALOG queries pack consecutive hours into waves of at most
-    * [[LogQuery.waveBudget]] compressed bytes, which keeps a wave's
-    * returned runs under `spark.driver.maxResultSize`. A wave is ONE
-    * Boom scan over all of its files: each scan partition filters, formats
-    * and sorts its own lines (no exchange), every partition runs in one
-    * Spark job, and the driver k-way merges the sorted runs on the full
-    * sort key, emitting each line as it is merged. Within a wave the merge
-    * is a true global sort; waves follow hour order, which the layout makes
-    * time-disjoint (fs/PathInfo.java:21-86). An hour over the budget on its
-    * own, and every explicit-path query, streams from the range-partitioned
-    * sort one partition at a time instead.
+    * Consecutive hours pack into waves of at most [[LogQuery.waveBudget]]
+    * compressed bytes, which keeps a wave's returned runs under
+    * `spark.driver.maxResultSize`. A wave is ONE Boom scan over all of its
+    * files: each scan partition filters, formats and sorts its own lines
+    * (no exchange), every partition runs in one Spark job, and the driver
+    * k-way merges the sorted runs on the full sort key, emitting each line
+    * as it is merged. Within a wave the merge is a true global sort; waves
+    * follow hour order, which the layout makes time-disjoint
+    * (fs/PathInfo.java:21-86). Explicit paths are one group, so they are
+    * one wave and need no layout guarantee. A wave over the budget (one
+    * hour, or the explicit paths) streams from the range-partitioned sort
+    * one partition at a time instead.
     */
   def printTo(spark: SparkSession, out: String => Unit): Long =
     printLines(spark, (b, off, len) => out(new String(b, off, len, UTF_8)))
@@ -201,20 +152,20 @@ case class LogQuery(
   private[engine] def printInWaves(spark: SparkSession, out: LogQuery.LineSink,
       maxWaveBytes: Long): Long = {
     import spark.implicits._
-    var n = 0L
-    def stream(ds: Dataset[String]): Unit = ds.toLocalIterator().forEachRemaining { s =>
-      val b = s.getBytes(UTF_8)
-      out(b, 0, b.length)
-      n += 1
-    }
-    if (paths.nonEmpty) stream(formatted(spark))
-    else LogQuery.waves(resolveHourGroups(spark), maxWaveBytes).foreach { wave =>
+    LogQuery.waves(resolveHourGroups(spark), maxWaveBytes).map { wave =>
       val files = wave.map(_._1)
-      if (wave.map(_._2).sum > maxWaveBytes)
-        stream(hourBranch(spark, files, rangeSort = true).as[String])
-      else n += LogQuery.merge(sortedRuns(spark, files), out)
-    }
-    n
+      if (wave.map(_._2).sum <= maxWaveBytes) LogQuery.merge(sortedRuns(spark, files), out)
+      else {
+        var n = 0L
+        LogQuery.sortFormatted(formattedRows(spark, files)).as[String]
+          .toLocalIterator().forEachRemaining { s =>
+            val b = s.getBytes(UTF_8)
+            out(b, 0, b.length)
+            n += 1
+          }
+        n
+      }
+    }.sum
   }
 
   /** One scan over `files`, each partition filtered, formatted and sorted
@@ -236,25 +187,21 @@ object LogQuery {
   /** The canonical output order (pig/formatAndSort.pg:40). */
   val SortCols: Seq[String] = Seq("timestamp", "createTime", "blockNumber", "lineNumber")
 
-  /** Per-hour byte ceiling for the exchange-free single-task hour sort
-    * (compressed on-disk bytes; boom decompresses ~5-10×, so 1 GiB here
-    * is a several-GiB single-task sort — the edge of comfortable). Hours
-    * past it route to the range-partitioned sort in
-    * [[LogQuery#formattedByHour]]. It also caps [[LogQuery#printTo]]'s wave
-    * budget: the most input whose merged result the driver holds at once.
+  /** The most compressed input one [[LogQuery#printTo]] wave reads: the
+    * cap on its wave budget, whatever `spark.driver.maxResultSize` allows.
     */
-  val DefaultHourSortMaxBytes: Long = 1L << 30
+  val MaxWaveBytes: Long = 1L << 30
 
   /** [[LogQuery#printTo]]'s wave budget in compressed bytes for a driver
     * that accepts at most `maxResultSize` bytes of task results per job
     * (`spark.driver.maxResultSize`; 0 means no limit). A wave's sorted runs
     * carry its decoded lines, so the budget is the limit divided by
     * [[graft.boom.BoomSchemas.InflationBound]], and never more than
-    * [[DefaultHourSortMaxBytes]].
+    * [[MaxWaveBytes]].
     */
   private[engine] def waveBudget(maxResultSize: Long): Long =
-    if (maxResultSize <= 0) DefaultHourSortMaxBytes
-    else math.min(DefaultHourSortMaxBytes, maxResultSize / BoomSchemas.InflationBound)
+    if (maxResultSize <= 0) MaxWaveBytes
+    else math.min(MaxWaveBytes, maxResultSize / BoomSchemas.InflationBound)
 
   /** Hour groups packed greedily, in order, into waves of at most
     * `maxBytes` (the groups' listed file sizes). Every wave holds at least

@@ -57,27 +57,41 @@ class BoomPropertySpec extends SparkTestBase {
     val fileLen = bm.length()
     val hconf = spark.sessionState.newHadoopConf()
 
-    def readRange(s: Long, e: Long): Seq[String] = {
+    /** (timestamp, message, eventId, createTime, blockNumber) per line. */
+    type Fields = (Long, String, Int, Long, Long)
+    def readRange(s: Long, e: Long): Seq[Fields] = {
       val it = new BoomFileRangeIterator(
         new org.apache.avro.mapred.FsInput(new org.apache.hadoop.fs.Path(bm.getAbsolutePath), hconf),
         BoomPushdown(), s, e)
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) out += it.next().message.toString
+      val out = scala.collection.mutable.ArrayBuffer[Fields]()
+      while (it.hasNext) {
+        val l = it.next()
+        out += ((l.timestamp, l.message.toString, l.eventId, l.createTime, l.blockNumber))
+      }
       it.close()
       out.toSeq
     }
 
-    // Whole-file raw read ≡ the DataFileStream-based iterator.
+    // Whole-file raw read ≡ Avro's own DataFileReader (a DataFileStream),
+    // read field by field: a reference that shares no code with graft's.
     val whole = readRange(0L, Long.MaxValue)
-    val viaStream = {
-      val it = new BoomFileIterator(
-        java.nio.file.Files.newInputStream(bm.toPath), BoomPushdown())
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) out += it.next().message.toString
-      it.close()
+    val viaAvro = {
+      val dfr = new org.apache.avro.file.DataFileReader(bm,
+        new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]())
+      val out = scala.collection.mutable.ArrayBuffer[Fields]()
+      while (dfr.hasNext) {
+        val rec = dfr.next()
+        def long(f: String) = rec.get(f).asInstanceOf[Long]
+        rec.get("logLines").asInstanceOf[java.util.Collection[_]].forEach { item =>
+          val l = item.asInstanceOf[org.apache.avro.generic.GenericRecord]
+          out += ((long("second") * 1000L + l.get("ms").asInstanceOf[Long], l.get("message").toString,
+            l.get("eventId").asInstanceOf[Int], long("createTime"), long("blockNumber")))
+        }
+      }
+      dfr.close()
       out.toSeq
     }
-    assert(whole === viaStream)
+    assert(whole === viaAvro)
     assert(whole.size === 30000)
 
     // Random cut points (fixed seeds): concatenated slices ≡ whole file.

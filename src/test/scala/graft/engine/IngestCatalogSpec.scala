@@ -5,6 +5,9 @@ import java.util.zip.GZIPOutputStream
 
 import graft.SparkTestBase
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
 class IngestCatalogSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -65,32 +68,32 @@ class IngestCatalogSpec extends SparkTestBase {
     assert(oneHour.resolvePaths(spark).forall(_.contains("/11/")))
     assert(oneHour.formatted(spark).count() === 2)
 
-    // Single-hour queries skip the global sort: NO Exchange in the plan,
-    // same ordered output.
+    // Ordered output is the range-partitioned global sort (Pig's ORDER BY)
+    // for every window, a single hour included: same ordered output.
+    def scanPartitions(ds: org.apache.spark.sql.Dataset[String]): Seq[Int] =
+      AqePlan.collect(ds.queryExecution.executedPlan) {
+        case b: BatchScanExec => b.inputPartitions.size
+      }
     val plan = oneHour.formatted(spark).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"single-hour logcat plan must be exchange-free:\n$plan")
+    assert(plan.contains("Exchange rangepartitioning"),
+      s"single-hour logcat plan must be a range sort:\n$plan")
     assert(oneHour.formatted(spark).collect().toSeq === Seq(
       "2024-03-01T11:00:00.000+00:00 start of hour eleven",
       "2024-03-01T11:30:00.000+00:00 middle of hour eleven"))
 
-    // Multi-hour catalog queries ALSO route exchange-free by default (one
-    // sorted partition per hour, concatenated in hour order), and match the
-    // range-partitioned global sort over the same lines exactly.
-    val multiHourPlan = q.formatted(spark).queryExecution.executedPlan.toString
-    assert(!multiHourPlan.contains("Exchange"),
-      s"multi-hour logcat plan must be exchange-free:\n$multiHourPlan")
+    // The two-hour window is two files, so the range sort reads more than
+    // one input partition, and matches the range-partitioned global sort
+    // over the same lines, and stdout's merged sorted runs, exactly.
+    val multiHour = q.formatted(spark)
+    val multiHourPlan = multiHour.queryExecution.executedPlan.toString
+    assert(multiHourPlan.contains("Exchange rangepartitioning"),
+      s"multi-hour logcat plan must be a range sort:\n$multiHourPlan")
+    assert(scanPartitions(multiHour) === Seq(2), multiHourPlan)
     assert(q.formatted(spark).collect().toSeq ===
       LogQuery.formatAndSort(q.lines(spark).toDF()).collect().toSeq.map(_.getString(0)))
-
-    // Oversized-hour auto-route: with the byte ceiling forced below any
-    // real hour, every hour takes the range-partitioned sort (Exchange
-    // appears) — and the output stays byte-identical to the
-    // exchange-free route (a range sort's output partitions are in key
-    // order, so the hour concatenation still reads globally ordered).
-    val forced = q.formattedByHour(spark, maxHourBytes = 1L)
-    assert(forced.queryExecution.executedPlan.toString.contains("Exchange"),
-      "an hour past maxHourBytes must take the range sort")
-    assert(forced.collect().toSeq === q.formattedByHour(spark).collect().toSeq)
+    val printed = scala.collection.mutable.ArrayBuffer[String]()
+    q.printTo(spark, printed += _)
+    assert(multiHour.collect().toSeq === printed.toSeq)
   }
 
   test("boomToParquet materializes hour-partitioned parquet with pruning") {
@@ -168,6 +171,9 @@ private object LogCatalogFixtures {
   def ingest(spark: org.apache.spark.sql.SparkSession, input: String, root: String): Unit =
     Ingest.textToCatalog(spark, input, root, dc = "7", service = "websvc", component = "app")
 }
+
+/** Plan walks that see through adaptive query execution. */
+private object AqePlan extends AdaptiveSparkPlanHelper
 
 private object LogToolCliTimes {
   def ms(iso: String): Long = java.time.Instant.parse(iso).toEpochMilli

@@ -80,18 +80,17 @@ class PrintToSpec extends SparkTestBase {
     out.toSeq
   }
 
-  test("CLI stdout equals the global sort on multi-file hours with equal timestamps") {
-    val root = catalog(seed = 11, runs = 3, hours = 2)
-    val q = query(root, 2)
-    val groups = LogCatalog.resolveByHourWithSizes(spark.sessionState.newHadoopConf(),
-      root, Dc, Svc, Comp, q.startMs, q.endMs)
-    assert(groups.size === 2 && groups.forall(_.size >= 2), groups)
-    assert(q.lines(spark).groupBy("timestamp").agg(countDistinct("createTime").as("files"))
-      .where($"files" > 1).count() > 10, "the fixture must repeat timestamps across files")
+  /** Three files per hour over two hours, shared by the CLI tests. */
+  private lazy val threeRuns = catalog(seed = 11, runs = 3, hours = 2)
+
+  /** Two files per hour over two hours, shared by the one-job tests. */
+  private lazy val twoRuns = catalog(seed = 5, runs = 2, hours = 2)
+
+  /** The six CLI tool cases: tool, its own arguments, its predicate. */
+  private lazy val toolCases: Seq[(String, Seq[String], LogToolCli.Args => LogPredicate)] = {
     val terms = Files.createTempFile("terms", ".txt")
     Files.write(terms, "disk\nnet\n".getBytes("UTF-8"))
-
-    val cases: Seq[(String, Seq[String], LogToolCli.Args => LogPredicate)] = Seq(
+    Seq(
       ("logcat", Nil, _ => MatchAll),
       ("loggrep", Seq("-regex=d[i]sk (net|cpu)"), a => Grep(a.regex, a.caseInsensitive)),
       ("logsearch", Seq("-string=FENÊTRE", "--i"), a => Search(a.string, a.caseInsensitive)),
@@ -100,18 +99,91 @@ class PrintToSpec extends SparkTestBase {
         a => MultiSearch(LogToolCli.loadTerms(a.strings), a.matchAll, a.caseInsensitive)),
       ("logmultisearch", Seq(s"-strings=$terms", "--a"),
         a => MultiSearch(LogToolCli.loadTerms(a.strings), a.matchAll, a.caseInsensitive)))
-    cases.foreach { case (tool, args, pred) =>
-      val argv = Seq(s"--root=$root", s"-dc=$Dc", s"-svc=$Svc", s"-comp=$Comp",
-        s"-start=${q.startMs}", s"-end=${q.endMs}", "--silent") ++ args
-      val buf = new ByteArrayOutputStream()
-      Console.withOut(new PrintStream(buf, true, "UTF-8")) {
-        LogToolCli.runWith(spark, tool, argv.toArray, pred)
+  }
+
+  private def toolArgv(root: String, q: LogQuery, args: Seq[String]): Array[String] =
+    (Seq(s"--root=$root", s"-dc=$Dc", s"-svc=$Svc", s"-comp=$Comp",
+      s"-start=${q.startMs}", s"-end=${q.endMs}", "--silent") ++ args).toArray
+
+  /** The CLI's stdout lines between the two data markers. */
+  private def cliStdout(tool: String, argv: Array[String],
+      pred: LogToolCli.Args => LogPredicate): Seq[String] = {
+    val buf = new ByteArrayOutputStream()
+    Console.withOut(new PrintStream(buf, true, "UTF-8")) {
+      LogToolCli.runWith(spark, tool, argv, pred)
+    }
+    val stdout = new String(buf.toByteArray, "UTF-8").split("\n").toSeq
+    assert(stdout.head === ";#### DATA RESULTS ####" && stdout.last === ";#### DATA RESULTS ####")
+    stdout.slice(1, stdout.size - 1)
+  }
+
+  /** Runs `body` with a listener on the jobs it starts. Returns its result,
+    * the number of jobs, and for each stage that ran: whether it reads no
+    * shuffle (a scan stage), and its task count.
+    */
+  private def observed[T](body: => T): (T, Int, Seq[(Boolean, Int)]) = {
+    val key = "graft.test.observed"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val rootStage = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null)) {
+          jobs.incrementAndGet()
+          e.stageInfos.foreach(s => rootStage.put(s.stageId, s.parentIds.isEmpty))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (rootStage.containsKey(e.stageId)) tasks.merge(e.stageId, 1, _ + _)
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, "1")
+    val result = try body
+      finally {
+        sc.setLocalProperty(key, null)
+        ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
       }
-      val stdout = new String(buf.toByteArray, "UTF-8").split("\n").toSeq
-      assert(stdout.head === ";#### DATA RESULTS ####" && stdout.last === ";#### DATA RESULTS ####")
-      val expected = globalSort(q.where(pred(LogToolCli.parseArgs(argv.toArray, tool))))
+    (result, jobs.get, tasks.asScala.toSeq.map { case (s, n) => (rootStage.get(s), n) })
+  }
+
+  private def inputPartitions(q: LogQuery): Int =
+    q.lines(spark).queryExecution.executedPlan
+      .collect { case b: BatchScanExec => b.inputPartitions.size }.sum
+
+  test("CLI stdout equals the global sort on multi-file hours with equal timestamps") {
+    val root = threeRuns
+    val q = query(root, 2)
+    val groups = LogCatalog.resolveByHourWithSizes(spark.sessionState.newHadoopConf(),
+      root, Dc, Svc, Comp, q.startMs, q.endMs)
+    assert(groups.size === 2 && groups.forall(_.size >= 2), groups)
+    assert(q.lines(spark).groupBy("timestamp").agg(countDistinct("createTime").as("files"))
+      .where($"files" > 1).count() > 10, "the fixture must repeat timestamps across files")
+    toolCases.foreach { case (tool, args, pred) =>
+      val argv = toolArgv(root, q, args)
+      val expected = globalSort(q.where(pred(LogToolCli.parseArgs(argv, tool))))
       assert(expected.nonEmpty, s"$tool $args matches nothing")
-      assert(stdout.slice(1, stdout.size - 1) === expected, s"$tool $args")
+      assert(cliStdout(tool, argv, pred) === expected, s"$tool $args")
+    }
+  }
+
+  test("CLI --out part files, read in name order, equal stdout; the write scans in parallel") {
+    val root = threeRuns
+    val q = query(root, 2)
+    toolCases.foreach { case (tool, args, pred) =>
+      val dir = Files.createTempDirectory("printto-out").resolve("out")
+      val (_, _, stages) = observed {
+        LogToolCli.runWith(spark, tool, toolArgv(root, q, args :+ s"--out=$dir"), pred)
+      }
+      val parts = Files.list(dir).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.getFileName.toString)
+      val written = parts.flatMap(p => Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8).asScala)
+      assert(written === cliStdout(tool, toolArgv(root, q, args), pred), s"$tool $args")
+      if (tool == "logcat") {
+        val scans = stages.filter(_._1).map(_._2)
+        assert(scans.nonEmpty && scans.forall(_ > 1), s"scan stage task counts $scans")
+      }
     }
   }
 
@@ -172,7 +244,7 @@ class PrintToSpec extends SparkTestBase {
 
     val budgets = Seq(
       // one wave over every hour
-      LogQuery.DefaultHourSortMaxBytes -> Seq(6),
+      LogQuery.MaxWaveBytes -> Seq(6),
       // hours 10+11 merged, hour 12 alone and over budget
       (bytes(0) + bytes(1)) -> Seq(4, 2),
       // one wave per hour, the last over budget
@@ -193,39 +265,30 @@ class PrintToSpec extends SparkTestBase {
   }
 
   test("a 2-hour printTo runs one job with one task per scan partition") {
-    val root = catalog(seed = 5, runs = 2, hours = 2)
-    val q = query(root, 2)
+    val q = query(twoRuns, 2)
     assert(q.resolvePaths(spark).size >= 3)
-    val inputPartitions = q.lines(spark).queryExecution.executedPlan
-      .collect { case b: BatchScanExec => b.inputPartitions.size }.sum
-    assert(inputPartitions >= 2, "the fixture must plan several scan partitions")
+    val partitions = inputPartitions(q)
+    assert(partitions >= 2, "the fixture must plan several scan partitions")
 
-    val key = "graft.test.printto"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) != null)) {
-          jobs.incrementAndGet()
-          e.stageIds.foreach(stages.add(_))
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) tasks.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, "1")
-    val n = try q.printTo(spark, _ => ())
-      finally {
-        sc.setLocalProperty(key, null)
-        ListenerBusDrain(sc)
-        sc.removeSparkListener(listener)
-      }
+    val (n, jobs, stages) = observed(q.printTo(spark, _ => ()))
     assert(n > 0)
-    assert(jobs.get === 1)
-    assert(tasks.get === inputPartitions)
+    assert(jobs === 1)
+    assert(stages.map(_._2).sum === partitions)
+  }
+
+  test("explicit paths print as one wave: one job, or the range sort over budget") {
+    val q = LogQuery(paths = Seq(twoRuns))
+    val partitions = inputPartitions(q)
+    assert(partitions >= 2, "the fixture must plan several scan partitions")
+    val expected = globalSort(q)
+
+    val (merged, jobs, stages) = observed(printed(q, LogQuery.MaxWaveBytes))
+    assert(merged === expected)
+    assert(jobs === 1)
+    assert(stages.map(_._2).sum === partitions)
+    assert(printed(q, 1L) === expected)
+    val searched = q.where(Search("disk", caseInsensitive = true))
+    assert(printed(searched, 1L) === globalSort(searched))
   }
 
   test("the wave budget derived from maxResultSize keeps every job's results under it") {
@@ -234,8 +297,8 @@ class PrintToSpec extends SparkTestBase {
     val q = query(root, 6)
     val budget = LogQuery.waveBudget(maxResultSize)
     assert(budget === maxResultSize / graft.boom.BoomSchemas.InflationBound)
-    assert(LogQuery.waveBudget(0L) === LogQuery.DefaultHourSortMaxBytes)
-    assert(LogQuery.waveBudget(16L << 30) === LogQuery.DefaultHourSortMaxBytes)
+    assert(LogQuery.waveBudget(0L) === LogQuery.MaxWaveBytes)
+    assert(LogQuery.waveBudget(16L << 30) === LogQuery.MaxWaveBytes)
 
     val key = "graft.test.resultsize"
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
@@ -265,7 +328,7 @@ class PrintToSpec extends SparkTestBase {
       (out, resultBytes.values().asScala.toSeq)
     }
 
-    val (whole, wholeJobs) = run(LogQuery.DefaultHourSortMaxBytes)
+    val (whole, wholeJobs) = run(LogQuery.MaxWaveBytes)
     assert(wholeJobs.size === 1)
     assert(wholeJobs.head > maxResultSize,
       s"one wave over the catalog must return more than $maxResultSize B")
