@@ -300,10 +300,9 @@ object SparkEntry {
     * right-sizes the per-batch overhead to the feed. r17 measurement:
     * state-store commit is ~35 ms per store INSTANCE per batch and the
     * stream-stream join holds 4 stores per partition, so 1 partition
-    * (default, env SPARK_GRAFT_STREAM_PARTITIONS) halves the r16
-    * commit cost vs the previous 2. The conf is restored on exit; the
-    * query handle itself captures the partition count at `start()`, so
-    * restoring immediately after start is safe.
+    * halves the r16 commit cost vs the previous 2. The conf is restored
+    * on exit; the query handle itself captures the partition count at
+    * `start()`, so restoring immediately after start is safe.
     */
   private def withStreamConf[T](s: SparkSession)(start: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -312,7 +311,7 @@ object SparkEntry {
     val prev = s.conf.get(key)
     val prevCk = s.conf.getOption(ckey)
     val prevNd = s.conf.getOption(ndkey)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "1"))
+    s.conf.set(key, "1")
     // No-data micro-batches OFF for the bounded harness replays (r17,
     // guide §1/§2: measured per-trigger breakdown showed HALF of all
     // batches were rows=0 no-data triggers at ~0.5 s each for the
@@ -323,9 +322,8 @@ object SparkEntry {
     // so every final emission already has a DATA batch to ride and the
     // collected output is identical (oracle re-proven). Production
     // streams that rely on timeout firing during quiet periods should
-    // keep the Spark default (true); env-overridable like the AQE knobs.
-    s.conf.set(ndkey,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_NODATA_BATCHES", "false"))
+    // keep the Spark default (true).
+    s.conf.set(ndkey, "false")
     // nio checkpoint manager for the local scratch checkpoints (r17):
     // avoids the ~35 ms fork/exec-chmod Hadoop local-FS tax per atomic
     // checkpoint write — see [[graft.streaming.LocalCheckpointFileManager]].
@@ -334,10 +332,10 @@ object SparkEntry {
     // own manager.
     val fmkey = "spark.sql.streaming.checkpointFileManagerClass"
     val prevFm = s.conf.getOption(fmkey)
-    val fmClass = sys.env.getOrElse("SPARK_GRAFT_STREAM_CKPT_FM",
-      classOf[graft.streaming.LocalCheckpointFileManager].getName)
-    if (streamCkptBase.isDefined && fmClass.nonEmpty) s.conf.set(fmkey, fmClass)
-    streamCkptBase.foreach(s.conf.set(ckey, _))
+    streamCkptBase.foreach { base =>
+      s.conf.set(fmkey, classOf[graft.streaming.LocalCheckpointFileManager].getName)
+      s.conf.set(ckey, base)
+    }
     try start finally {
       s.conf.set(key, prev)
       prevNd match {

@@ -3,7 +3,7 @@ package graft.boom
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.avro.Schema
-import org.apache.avro.io.{DatumReader, Decoder, DecoderFactory}
+import org.apache.avro.io.{Decoder, DecoderFactory}
 import org.apache.avro.util.Utf8
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -69,7 +69,7 @@ final case class BoomPushdown(
   def hasTimeFilter: Boolean = minTs != Long.MinValue || maxTsExcl != Long.MaxValue
 }
 
-/** Hand-rolled Avro `DatumReader` for `logBlock` records that filters *during*
+/** Hand-rolled Avro decoder for `logBlock` records that filters *during*
   * decode:
   *
   *   - blocks whose `second` lies wholly outside the pushed time range have
@@ -91,17 +91,16 @@ final case class BoomPushdown(
   * are dispatched by name, unknown fields are skipped, and a missing `eventId`
   * defaults to 0.
   *
-  * Each `read` returns the (possibly empty) buffer of surviving lines of one
-  * logBlock record.
+  * Each `read` appends the surviving lines of one logBlock record to the
+  * caller's buffer.
   */
-final class BoomBlockDatumReader(pushdown: BoomPushdown)
-    extends DatumReader[ArrayBuffer[BoomLine]] {
+final class BoomBlockReader(pushdown: BoomPushdown) {
 
   private var writerSchema: Schema = BoomSchemas.logBlockSchema
   private var utf8 = new Utf8
   private val clauses: Array[Array[BoomTerm]] = pushdown.clauses.map(_.toArray).toArray
 
-  override def setSchema(schema: Schema): Unit = {
+  def setSchema(schema: Schema): Unit = {
     // The streaming decode below computes base = second·1000 the moment
     // the logLines field is dispatched, so the per-line math is only
     // correct when the writer schema puts the metadata longs BEFORE the
@@ -136,8 +135,7 @@ final class BoomBlockDatumReader(pushdown: BoomPushdown)
     writerSchema = schema
   }
 
-  override def read(reuse: ArrayBuffer[BoomLine], in: Decoder): ArrayBuffer[BoomLine] = {
-    val out = if (reuse == null) new ArrayBuffer[BoomLine] else { reuse.clear(); reuse }
+  def read(in: Decoder, out: ArrayBuffer[BoomLine]): Unit = {
     var second = 0L
     var createTime = 0L
     var blockNumber = 0L
@@ -169,7 +167,6 @@ final class BoomBlockDatumReader(pushdown: BoomPushdown)
       }
       f += 1
     }
-    out
   }
 
   /** CNF term test; uppercases the line at most once, lazily. */
@@ -395,7 +392,7 @@ final class BoomFileRangeIterator(
     extends Iterator[BoomLine] with AutoCloseable {
 
   private val SyncSize = 16
-  private val datumReader = new BoomBlockDatumReader(pushdown)
+  private val blockReader = new BoomBlockReader(pushdown)
 
   // Block-scannable clauses: raw term bytes (and, for ci terms, the term is
   // searched in the block's ASCII-uppercased copy).
@@ -491,7 +488,7 @@ final class BoomFileRangeIterator(
     if (!readFully(sync, 0, SyncSize)) throw corrupt("EOF in header sync", headerSyncAt)
     headerEnd = pos
     if (schemaJson == null) throw new java.io.IOException(s"Boom file missing avro.schema: $file")
-    datumReader.setSchema(new Schema.Parser().parse(schemaJson))
+    blockReader.setSchema(new Schema.Parser().parse(schemaJson))
     if (codec != "null" && codec != "deflate") {
       throw new UnsupportedOperationException(s"Unsupported boom codec: $codec")
     }
@@ -549,7 +546,6 @@ final class BoomFileRangeIterator(
 
   private var buffer: ArrayBuffer[BoomLine] = new ArrayBuffer[BoomLine]
   private var bufPos = 0
-  private var recordBuf: ArrayBuffer[BoomLine] = new ArrayBuffer[BoomLine]
   private var binDecoder: org.apache.avro.io.BinaryDecoder = _
   private var done = false
 
@@ -707,17 +703,13 @@ final class BoomFileRangeIterator(
     blocksDecoded += 1
     binDecoder = DecoderFactory.get().binaryDecoder(blockData, 0, blockLen, binDecoder)
     var i = 0
-    while (i < count) {
-      recordBuf = datumReader.read(recordBuf, binDecoder)
-      buffer ++= recordBuf
-      i += 1
-    }
+    while (i < count) { blockReader.read(binDecoder, buffer); i += 1 }
     true
   }
 
   /** Drain the slice in AGGREGATE mode (pushed COUNT(*) and
     * MIN/MAX(timestamp)): no BoomLine/message ever materializes
-    * ([[BoomBlockDatumReader.statLines]] per record). Terminal: the
+    * ([[BoomBlockReader.statLines]] per record). Terminal: the
     * iterator is `done` afterwards.
     */
   def statsRemaining(stats: BoomAggStats): Unit = {
@@ -731,7 +723,7 @@ final class BoomFileRangeIterator(
       blocksDecoded += 1
       binDecoder = DecoderFactory.get().binaryDecoder(blockData, 0, blockLen, binDecoder)
       var i = 0
-      while (i < count) { datumReader.statLines(binDecoder, stats); i += 1 }
+      while (i < count) { blockReader.statLines(binDecoder, stats); i += 1 }
       count = nextRawBlock()
     }
     done = true

@@ -7,8 +7,10 @@ import java.time.format.DateTimeFormatter
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 import java.util.Locale
 
+import graft.Tuning
 import graft.engine._
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Argument-compatible command-line front-ends for the reference's four query
@@ -33,7 +35,9 @@ import org.apache.spark.sql.SparkSession
   * SURVEY.md §2.5 O3).
   *
   * The catalog root defaults to `/` (i.e. paths like `/service/<dc>/...`) and
-  * can be overridden with `--root=` or `GRAFT_LOG_ROOT`.
+  * can be overridden with `--root=` or `GRAFT_LOG_ROOT` ([[logRoot]]). The
+  * tools run on the launcher's master (`spark-submit --master`) unless
+  * `GRAFT_SPARK_MASTER` names another ([[master]]).
   *
   * Stdout carries the result lines as raw UTF-8 bytes whatever the locale,
   * as the reference copied its UTF-8 output files to the terminal.
@@ -51,7 +55,7 @@ object LogToolCli {
       string: String = null, regex: String = null, strings: String = null,
       caseInsensitive: Boolean = false, matchAll: Boolean = false,
       out: String = null, dateFormat: String = "RFC5424",
-      root: String = sys.env.getOrElse("GRAFT_LOG_ROOT", ""),
+      root: String = logRoot(),
       silent: Boolean = false)
 
   def parseArgs(argv: Array[String], tool: String): Args = {
@@ -164,19 +168,33 @@ object LogToolCli {
 
   private[cli] def usageError(msg: String): Nothing = throw new UsageError(msg)
 
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_SPARK_MASTER", "local[*]"))
-      .appName("graft-logtool")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** The log tools' session, built by [[graft.Tuning.build]] on [[master]]:
+    * UTC, UI off, 32 shuffle partitions for `--out`'s range sort; log
+    * level ERROR.
+    */
+  def session(): SparkSession = Tuning.build(Map(
+    "spark.master" -> master(sys.env, new SparkConf()),
+    "spark.app.name" -> "graft-logtool",
+    "spark.sql.shuffle.partitions" -> "32",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false"), "ERROR")
+
+  /** `GRAFT_SPARK_MASTER` if `env` sets it, else the master the launcher
+    * set in `launcher` (`spark-submit --master` arrives as the
+    * `spark.master` system property, which a new `SparkConf` reads), else
+    * `local[*]`.
+    */
+  private[cli] def master(env: Map[String, String], launcher: SparkConf): String =
+    env.get("GRAFT_SPARK_MASTER")
+      .orElse(launcher.getOption("spark.master"))
+      .getOrElse("local[*]")
+
+  /** The directory that holds the catalog's `service/` tree:
+    * `GRAFT_LOG_ROOT`, or `""` (the filesystem root) when `env` does not
+    * set it. Every tool defaults its root from here.
+    */
+  def logRoot(env: Map[String, String] = sys.env): String =
+    env.getOrElse("GRAFT_LOG_ROOT", "")
 
   def run(tool: String, argv: Array[String], predicate: Args => LogPredicate): Unit = {
     def fail(e: Exception): Nothing = {

@@ -103,8 +103,8 @@ object logmaintenance {
 
   private def runService(spark: org.apache.spark.sql.SparkSession,
       argv: Array[String]): Int = {
-    val root = opt(argv, "--root",
-      sys.env.getOrElse("GRAFT_LOG_ROOT", "/service"))
+    // --root= names the service/ directory itself, as the reference's did.
+    val root = opt(argv, "--root", s"${LogToolCli.logRoot()}/service")
     val dc = opt(argv, "-dc")
     val svc = opt(argv, "-svc")
     if (dc == null || svc == null) {

@@ -15,6 +15,12 @@ import graft.engine.Reporting
   * }}}
   */
 object ReportingCli {
+  /** `--root=`, else [[LogToolCli.logRoot]]: the directory that holds
+    * `service/`, the same default root as logcat's.
+    */
+  def root(argv: Array[String], env: Map[String, String] = sys.env): String =
+    opt(argv, "--root", LogToolCli.logRoot(env))
+
   def opt(argv: Array[String], key: String, default: String = null): String =
     argv.collectFirst { case s if s.startsWith(key + "=") => s.drop(key.length + 1) }
       .getOrElse(default)
@@ -29,7 +35,7 @@ object ReportingCli {
 
 object logindex {
   def main(argv: Array[String]): Unit = {
-    val root = ReportingCli.opt(argv, "--root", sys.env.getOrElse("GRAFT_LOG_ROOT", "/service"))
+    val root = ReportingCli.root(argv)
     val spark = LogToolCli.session()
     try {
       val listing = Reporting.fileListing(spark, root)
@@ -41,7 +47,7 @@ object logindex {
 
 object queryindex {
   def main(argv: Array[String]): Unit = {
-    val root = ReportingCli.opt(argv, "--root", sys.env.getOrElse("GRAFT_LOG_ROOT", "/service"))
+    val root = ReportingCli.root(argv)
     val spark = LogToolCli.session()
     try {
       val idx = Reporting.indexLogs(Reporting.fileListing(spark, root))
@@ -58,7 +64,7 @@ object queryindex {
 
 object logstats {
   def main(argv: Array[String]): Unit = {
-    val root = ReportingCli.opt(argv, "--root", sys.env.getOrElse("GRAFT_LOG_ROOT", "/service"))
+    val root = ReportingCli.root(argv)
     val dc = ReportingCli.opt(argv, "-dc")
     val svc = ReportingCli.opt(argv, "-svc")
     val comp = ReportingCli.opt(argv, "-comp")

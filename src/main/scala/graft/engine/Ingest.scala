@@ -9,19 +9,22 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
   *
   * Per input partition (the reference's unit was one Pig task), the parser is
   * auto-detected from the first line (TextToBoomConverter.java:54-80:
-  * RFC5424 first, then RFC3164), `createTime` is the first line's timestamp,
-  * and lines that fail to parse carry the previous line's timestamp — all
-  * per-partition sequential state, so it runs as `mapPartitions` rather than a
-  * window function (the loop is genuinely stateful on arbitrary input order,
-  * and stays narrow/shuffle-free).
+  * RFC5424 first, then RFC3164), and lines that fail to parse carry the
+  * previous line's timestamp — per-partition sequential state, so it runs as
+  * `mapPartitions` rather than a window function (the loop is genuinely
+  * stateful on arbitrary input order, and stays narrow/shuffle-free).
   *
-  * Block assignment (blockNumber roll on new-second/1000-lines,
-  * TextToBoomConverter.java:94-103) is done by the boom writer's `ingest`
-  * mode, keeping this transform free of writer bookkeeping.
+  * Block metadata (`createTime` = the block's first timestamp, blockNumber
+  * rolling on new-second/1000-lines, TextToBoomConverter.java:94-103) is
+  * minted after the sort by the boom writer's `ingest` mode, which every
+  * write path here uses.
   */
 object Ingest {
 
-  /** Parse raw text lines into [[LogLine]]s (block metadata minted at write). */
+  /** Parse raw text lines into [[LogLine]]s: timestamp and message only.
+    * `createTime`, `blockNumber` and `lineNumber` are 0 until the `ingest`
+    * write mints them.
+    */
   def parse(
       lines: Dataset[String],
       parserName: Option[String] = None,
@@ -32,17 +35,6 @@ object Ingest {
       var parser: TimestampParser =
         parserName.map(TimestampParsers.forName(_, nowMs)).orNull
       var lastTs = 0L
-      // Explicit first-row flag, not <0 sentinels: the first timestamp may
-      // be pre-epoch (negative), where a sentinel would re-mint createTime
-      // per row and a `lastSecond >= 0` guard would skip block-number
-      // increments (two blocks sharing a number). floorDiv matches the
-      // writer's second computation for negative timestamps.
-      var started = false
-      var createTime = -1L
-      var blockNumber = 0L
-      var lastSecond = -1L
-      var linesInBlock = 0
-      var lineNo = 0L
       it.map { raw =>
         if (parser == null) {
           parser = TimestampParsers.detect(raw, nowMs)
@@ -51,20 +43,7 @@ object Ingest {
         val (tsStr, rest) = parser.splitLine(raw)
         val ts = Option(tsStr).flatMap(parser.tryParse).getOrElse(lastTs)
         lastTs = ts
-        val second = Math.floorDiv(ts, 1000L)
-        if (!started) {
-          started = true
-          createTime = ts
-          lastSecond = second
-        } else if (second != lastSecond || linesInBlock >= 1000) {
-          blockNumber += 1
-          lastSecond = second
-          linesInBlock = 0
-          lineNo = 0L
-        }
-        linesInBlock += 1
-        lineNo += 1
-        LogLine(ts, rest, 0, createTime, blockNumber, lineNo)
+        LogLine(ts, rest, 0, 0L, 0L, 0L)
       }
     }
   }

@@ -25,7 +25,9 @@ object Reporting {
   def fileListing(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
-    val serviceRoot = new Path(root, "service")
+    // LogCatalog's `<root>/service` join: the empty root is the filesystem
+    // root, where `new Path("", "service")` would throw.
+    val serviceRoot = new Path(s"$root/service")
     val fs = serviceRoot.getFileSystem(conf)
     val rows = ArrayBuffer[(String, Long, Long)]()
     def walk(p: Path): Unit = {

@@ -12,17 +12,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The conf specs run under: the harness conf on 4 local cores. No
+    * table directory sizes it, so the AQE advisory size takes its 1 MiB
+    * floor, as every harness fixture derives.
+    */
+  val conf: Map[String, String] = Tuning.harnessConf(sfDir = "", cpus = 4)
+
+  lazy val session: SparkSession = Tuning.build(conf, "WARN")
 }

@@ -1,7 +1,7 @@
 package graft
 
-class TuningSpec extends org.scalatest.funsuite.AnyFunSuite {
-  test("advisory derivation: fixture floor, cluster ceiling, env override") {
+class TuningSpec extends SparkTestBase {
+  test("advisory derivation: fixture floor, cluster ceiling") {
     // sf0.1 is ~17 MB -> derived 66 KB -> clamped to the 1 MB floor,
     // reproducing the r16 measured local optimum exactly.
     assert(Tuning.advisoryBytes("/root/testdata/sf0.1", 32) ==
@@ -10,9 +10,7 @@ class TuningSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Tuning.advisoryBytes("/no/such/dir", 32) == (1L << 20).toString)
   }
 
-  test("harness conf: the exact key set Bench has always built, for the default env") {
-    assume(!sys.env.keys.exists(_.startsWith("SPARK_GRAFT_")),
-      "a SPARK_GRAFT_* override is set")
+  test("harness conf: the exact key set Bench has always built") {
     assert(Tuning.harnessConf("/root/testdata/sf0.01", 4) == Map(
       "spark.master" -> "local[4]",
       "spark.sql.shuffle.partitions" -> "4",
@@ -25,5 +23,12 @@ class TuningSpec extends org.scalatest.funsuite.AnyFunSuite {
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "524288",
       "spark.sql.codegen.cache.maxEntries" -> "8192",
       "spark.ui.enabled" -> "false"))
+  }
+
+  test("the test session runs under every key and value of the harness conf") {
+    val expected = Tuning.harnessConf("", 4)
+    assert(SparkTestBase.conf == expected)
+    val session = spark.conf.getAll
+    expected.foreach { case (k, v) => assert(session.get(k).contains(v), k) }
   }
 }

@@ -20,12 +20,15 @@ class IngestCatalogSpec extends SparkTestBase {
   test("pre-epoch ingest: one createTime, floored seconds, distinct block numbers") {
     // The <0 sentinel family: negative first timestamps must NOT re-mint
     // createTime per row, truncate seconds toward zero, or skip the
-    // block-number increment when rolling out of a negative second.
-    val parsed = Ingest.parse(Seq(
+    // block-number increment when rolling out of a negative second. The
+    // writer mints the block metadata; one small text file is one
+    // partition, so one writer task, like one reference mapper.
+    val out = Files.createTempDirectory("pre-epoch").toString
+    Ingest.textToBoom(spark, writeText(Seq(
       "1969-12-31T23:59:59Z before epoch a",
       "1969-12-31T23:59:59Z before epoch b",
-      "1970-01-01T00:00:01Z after epoch").toDS().coalesce(1), // one ingest unit: createTime/block state is per partition, like one reference mapper
-      Some("RFC5424"))
+      "1970-01-01T00:00:01Z after epoch")), out, Some("RFC5424"))
+    val parsed = spark.read.format("boom").load(out).as[graft.core.LogLine]
       .collect().sortBy(_.timestamp)
     assert(parsed.map(_.timestamp).toSeq === Seq(-1000L, -1000L, 1000L))
     // createTime = FIRST line's timestamp, for every line.
