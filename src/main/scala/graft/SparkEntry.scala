@@ -2992,13 +2992,13 @@ object SparkEntry {
     }),
 
     // Compaction under the oracle (r16): the SAME events fixture dropped as
-    // 8 small incoming/ files into two sibling partition trees, one
-    // compacted by rawMerge (raw Avro-block copy, multi-bin forced via a
-    // third-of-input target) and one by merge (decode + re-encode), then
-    // both data/ trees scanned back through the boom source. Every line AND
-    // the per-line block-metadata runs (createTime, blockNumber — reboom
-    // preserves them) must survive both paths bit-for-bit: the rollups must
-    // equal each other and DuckDB's direct replay over the original events.
+    // 8 small incoming/ files into two sibling partition trees, both
+    // compacted by rawMerge (raw Avro-block copy): `raw` into three bins
+    // (a third-of-input target), `rec` into one (the default target). Both
+    // data/ trees are scanned back through the boom source. Every line AND
+    // the per-line block-metadata runs (createTime, blockNumber) must
+    // survive both bin layouts bit-for-bit: the rollups must equal each
+    // other and DuckDB's direct replay over the original events.
     "q_rawmerge_roundtrip" -> ((s, dir) => {
       val base = fixtureDir("rawmerge-oracle", dir) { d =>
         def dropIncoming(name: String): String = {
@@ -3021,7 +3021,7 @@ object SparkEntry {
           .getContentSummary(inPath).getLength
         graft.maintenance.LogMaintenance.rawMerge(s, rawTree,
           targetFileSize = inBytes / 3 + 1)
-        graft.maintenance.LogMaintenance.merge(s, recTree)
+        graft.maintenance.LogMaintenance.rawMerge(s, recTree)
       }
       val rawTree = s"$base/raw"
       val recTree = s"$base/rec"

@@ -14,12 +14,17 @@ import org.apache.hadoop.fs.Path
   *   logmaintenance --root=/service -dc=99 -svc=websvc
   *     [--logdir=logs] [--filter-file=PATH.yaml]
   *     [--days-before-archive=N] [--days-before-delete=N]
-  *     [--no-merge] [--record-merge] [--wait-minutes=N]
+  *     [--no-merge] [--wait-minutes=N]
   *     [--max-concurrent=N] [--target-file-size=BYTES] [--no-orphan-reset]
   *   logmaintenance --conf=FILE ...         # many services, one line each:
   *                                          #   <dc> <service> [options]
-  *     [--max-concurrent-services=N]
+  *     [--max-concurrent-services=N] [--lock-dir=DIR]
   * }}}
+  *
+  * Compaction copies raw Avro blocks
+  * ([[graft.maintenance.LogMaintenance.rawMerge]]). An argument outside
+  * this list exits 1 with `;logmaintenance: unrecognized argument: <arg>`,
+  * before the lock is taken or anything is submitted.
   *
   * Semantics carried over from the wrapper script:
   *   - ONE run at a time: an exclusive lock file (flock equivalent —
@@ -38,6 +43,7 @@ object logmaintenance {
   def main(argv: Array[String]): Unit = sys.exit(run(argv))
 
   def run(argv: Array[String]): Int = {
+    if (unrecognized(Seq(argv))) return 1
     val lockDir = opt(argv, "--lock-dir",
       sys.env.getOrElse("GRAFT_MAINT_LOCK_DIR", "/tmp/graft-logmaintenance"))
     Files.createDirectories(Paths.get(lockDir))
@@ -84,6 +90,7 @@ object logmaintenance {
         Array(s"-dc=${parts(0)}", s"-svc=${parts(1)}") ++
           parts.drop(2) ++ argv
       }
+      if (unrecognized(serviceArgvs)) return 1
       val par = math.max(1,
         opt(argv, "--max-concurrent-services", "1").toInt)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
@@ -96,9 +103,28 @@ object logmaintenance {
         val codes = results.map(_.get())
         if (codes.forall(_ == 0)) 0 else 1
       } finally pool.shutdownNow()
-    } else {
-      runService(spark, argv)
-    }
+    } else if (unrecognized(Seq(argv))) 1
+    else runService(spark, argv)
+  }
+
+  /** Every flag this tool reads: a `=`-suffixed entry takes a value, any
+    * other is a bare switch.
+    */
+  private val Flags = Seq("--root=", "-dc=", "-svc=", "--logdir=",
+    "--filter-file=", "--days-before-archive=", "--days-before-delete=",
+    "--no-merge", "--wait-minutes=", "--max-concurrent=",
+    "--target-file-size=", "--no-orphan-reset", "--conf=",
+    "--max-concurrent-services=", "--lock-dir=")
+
+  /** Reports the first argument in `argvs` that is not one of [[Flags]] on
+    * stderr, as [[LogToolCli.parseArgs]] does, and says whether there was
+    * one.
+    */
+  private def unrecognized(argvs: Seq[Array[String]]): Boolean = {
+    val bad = argvs.flatten.find(a => !Flags.exists(f =>
+      if (f.endsWith("=")) a.startsWith(f) else a == f))
+    bad.foreach(a => System.err.println(s";logmaintenance: unrecognized argument: $a"))
+    bad.nonEmpty
   }
 
   private def runService(spark: org.apache.spark.sql.SparkSession,
@@ -133,7 +159,6 @@ object logmaintenance {
     }
     val config = MaintenanceConfig(
       doMerge = !argv.contains("--no-merge"),
-      rawBlockMerge = !argv.contains("--record-merge"),
       daysBeforeArchive = daysBeforeArchive,
       daysBeforeDelete = daysBeforeDelete,
       filterYaml = filterYaml,

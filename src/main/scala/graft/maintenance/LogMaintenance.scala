@@ -10,152 +10,22 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's maintenance subsystem (admin/LogMaintenance.java) rebuilt
-  * on Spark jobs + atomic renames.
+  * on Spark jobs + renames.
   *
   * Lifecycle per hour/component partition: `incoming/` (raw small files) →
-  * [[merge]] → `data/` (compacted `.bm`) → [[filterArchive]] → `archive/`
+  * [[rawMerge]] → `data/` (compacted `.bm`) → [[filterArchive]] → `archive/`
   * (filtered `.bm`) → [[retentionDelete]].
   *
   * The reference coordinated cross-process access with ZooKeeper read/write
   * locks (locks/LockUtil.java) because MapReduce jobs rewrote directories in
-  * place. Here every job writes to a fresh `working/<id>/` directory and
-  * promotes results with atomic renames, with `*.tmp` outputs invisible to
-  * readers — so queries never see partial state and the lock service is
-  * unnecessary (SURVEY.md §2.8 M7).
+  * place. Here every job writes to a fresh `working/<id>/` directory, with
+  * `*.tmp` outputs invisible to readers, and promotes each result with a
+  * rename, so each file appears atomically (SURVEY.md §2.8 M7). Queries take
+  * no lock, and a job moves lines between branches in more than one step
+  * (stage, promote, delete): a listing that races a promotion can read the
+  * moved lines twice or not at all.
   */
 object LogMaintenance {
-
-  /** Compaction (M1): read all incoming branches of a partition dir, rewrite
-    * into `data/` as `.bm` files of roughly `targetFileSize` COMPRESSED
-    * bytes (same convention as [[rawMerge]]), preserving block metadata,
-    * then remove the merged inputs.
-    *
-    * Reference: LogMaintenance.java:968-1186 (move → MR merge → promote →
-    * `_READY`). The reference merged raw Avro blocks without decoding
-    * (AvroBlockWriterMapper); Spark decodes + re-encodes, which additionally
-    * re-packs under-filled blocks.
-    *
-    * Output sizing is MEASURED, not guessed: expected output bytes =
-    * Σ input bytes × a re-encode ratio probed by decoding the smallest
-    * input file (≤ [[MaxProbeBytes]]) and re-compressing it the way the
-    * writer will. For deflate Boom inputs the ratio is ≈1; a foreign
-    * (e.g. null-codec) container probes its true compression so a
-    * compressible corpus is not split into far-undersized files.
-    */
-  def merge(
-      spark: SparkSession,
-      partitionDir: String,
-      targetFileSize: Long = 512L * 1024 * 1024): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new Path(partitionDir)
-    val fs = dir.getFileSystem(conf)
-    val incoming = new Path(dir, "incoming")
-    if (!fs.exists(incoming)) return
-
-    val inputBytes = fs.getContentSummary(incoming).getLength
-    if (inputBytes == 0) return
-
-    val working = new Path(dir, s"working/merge-${System.nanoTime()}")
-    val staged = new Path(working, "incoming")
-    // HDFS rename requires the DESTINATION PARENT to exist and returns
-    // false otherwise (RawLocalFileSystem masks this by falling back to a
-    // copy that mkdirs for you) — the parent of `staged` is `working`,
-    // not working/.
-    fs.mkdirs(working)
-    if (!fs.rename(incoming, staged)) {
-      throw new java.io.IOException(s"cannot stage $incoming")
-    }
-    try {
-      val files = graft.boom.BoomDataSource
-        .listFiles(conf, Seq(staged.toString))
-        .map(s => (s.getPath, s.getLen))
-      val totalBytes = files.map(_._2).sum
-      val ratio =
-        if (files.isEmpty) 1.0 else reencodeRatio(fs, files.minBy(_._2))
-      val parts = math.max(1,
-        math.round(totalBytes * ratio / targetFileSize.toDouble).toInt)
-      val df = spark.read.format("boom").load(staged.toString)
-        .repartition(parts)
-        // Local sort restores (createTime, blockNumber) runs that the
-        // round-robin shuffle scattered — fuller blocks, better deflate,
-        // and the probe's per-run compression model stays representative.
-        // No extra exchange: sortWithinPartitions is map-side only.
-        .sortWithinPartitions("createTime", "blockNumber", "timestamp")
-      Ingest.reboom(df, new Path(dir, "data").toString, SaveMode.Append)
-      fs.create(new Path(dir, "data/_READY"), true).close()
-      removeWorking(fs, working)
-    } catch {
-      case e: Throwable =>
-        // Orphan recovery (M5): put staged data back for the next run.
-        fs.mkdirs(incoming.getParent)
-        fs.rename(staged, incoming)
-        removeWorking(fs, working)
-        throw e
-    }
-  }
-
-  /** Probe budget for [[reencodeRatio]]: enough input to cover many Avro
-    * blocks, small enough that the driver-side decode is negligible next
-    * to the merge job itself.
-    */
-  private val MaxProbeBytes = 8L * 1024 * 1024
-
-  private final class CountingIn(in: java.io.InputStream)
-      extends java.io.FilterInputStream(in) {
-    var count = 0L
-    override def read(): Int = {
-      val r = super.read(); if (r >= 0) count += 1; r
-    }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val r = super.read(b, off, len); if (r > 0) count += r; r
-    }
-    override def skip(n: Long): Long = {
-      val r = super.skip(n); count += r; r
-    }
-  }
-
-  /** Measured compressed-out / compressed-in ratio for [[merge]]'s output
-    * sizing: decode the given (smallest) input container and re-encode its
-    * blocks with the writer's own codec/level, counting consumed input
-    * bytes so an early stop at [[MaxProbeBytes]] still yields a like-for-
-    * like ratio. Clamped to [0.05, 8] — a pathological probe (one tiny
-    * block, exotic content) must not produce an absurd partition count.
-    */
-  private def reencodeRatio(fs: FileSystem, file: (Path, Long)): Double = {
-    import org.apache.avro.file.{CodecFactory, DataFileStream, DataFileWriter}
-    import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
-    val (path, len) = file
-    var counting: CountingIn = null
-    try {
-      counting = new CountingIn(fs.open(path))
-      val in = new DataFileStream[GenericRecord](counting,
-        new GenericDatumReader[GenericRecord]())
-      try {
-        val baos = new java.io.ByteArrayOutputStream()
-        val w = new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](in.getSchema))
-        w.setCodec(
-          CodecFactory.deflateCodec(graft.boom.BoomSchemas.DeflateLevel))
-        w.create(in.getSchema, baos)
-        var blocks = 0
-        while (in.hasNext && counting.count < MaxProbeBytes) {
-          w.append(in.next()); blocks += 1
-        }
-        w.close()
-        val consumed = math.min(counting.count, len)
-        if (blocks == 0 || consumed <= 0) 1.0
-        else math.max(0.05, math.min(baos.size().toDouble / consumed, 8.0))
-      } finally in.close()
-    } catch {
-      case _: Exception => 1.0 // unreadable probe: neutral sizing; the
-      // merge job itself surfaces the real error with full context
-    } finally {
-      // A DataFileStream-constructor failure (non-Avro probe file) leaves
-      // the raw stream open; double-close after the normal path is a no-op.
-      if (counting != null)
-        try counting.close() catch { case _: Exception => () }
-    }
-  }
 
   /** Drop this run's `working/<id>/` and, if that leaves `working/` empty,
     * the parent too — a lingering empty `working/` would read as an
@@ -170,9 +40,10 @@ object LogMaintenance {
     } catch { case _: Exception => () } // best-effort; next pass retries
   }
 
-  /** Raw block-level compaction (M2): merge `incoming/` into `data/` by
-    * COPYING compressed Avro blocks verbatim — no record decode, no
-    * deflate round-trip — the reference's AvroBlockWriterMapper trick
+  /** Compaction (M1/M2): merge `incoming/` into `data/` by COPYING
+    * compressed Avro blocks verbatim — no record decode, no deflate
+    * round-trip — the reference's merge job (LogMaintenance.java:968-1186)
+    * and its AvroBlockWriterMapper trick
     * (mapreduce/avro/AvroBlockWriterMapper.java:38-90, which streams raw
     * block bytes into a container under the writer's own sync marker).
     * Avro's public `DataFileWriter.appendAllFrom(in, recompress = false)`
@@ -180,12 +51,11 @@ object LogMaintenance {
     * is always deflate); a foreign-codec file degrades to block-level
     * recompression, still never deserializing records.
     *
-    * vs [[merge]]: ~zero CPU per byte (the 100 TB compaction-pass win)
-    * and block metadata byte-identical, but under-filled blocks are NOT
-    * re-packed and files are bin-packed whole (no splitting), so output
-    * sizes are approximate. Same staging/commit protocol as [[merge]]:
-    * stage incoming → working, write `.tmp`, atomic-rename into `data/`,
-    * `_READY`, orphan recovery on failure.
+    * ~zero CPU per byte and block metadata byte-identical, but under-filled
+    * blocks are NOT re-packed and files are bin-packed whole (no
+    * splitting), so output sizes are approximate. Protocol: stage incoming
+    * → working, write `.tmp`, rename each bin into `data/`, `_READY`,
+    * delete working; orphan recovery on failure.
     *
     * Distribution: one Spark task per output bin (first-fit by compressed
     * size) — compaction parallelism is bin count, the same shape as the
@@ -214,7 +84,7 @@ object LogMaintenance {
       throw new java.io.IOException(s"cannot stage $incoming")
     }
     try {
-      // Same listing semantics as the read path and merge()
+      // Same listing semantics as the read path
       // (BoomDataSource.listFiles): hidden/_-prefixed/tmp entries and
       // zero-length files excluded — a crashed ingest's _temporary task
       // attempts must not leak blocks into data/, and a 0-byte leftover
@@ -250,8 +120,7 @@ object LogMaintenance {
         // output with renames. A failure in any bin therefore leaves
         // data/ untouched and the staged inputs restored — re-running
         // after removing a bad file cannot duplicate the good bins'
-        // blocks (the record-level merge() gets the same guarantee from
-        // Spark's job commit protocol).
+        // blocks.
         spark.sparkContext
           .parallelize(bins.map(_._1.toSeq).toSeq.zipWithIndex, bins.size)
           .foreach { case (bin, idx) =>

@@ -13,9 +13,6 @@ import org.apache.spark.sql.SparkSession
   * (admin/LogMaintenance.java:106-175: DAYS_BEFORE_ARCHIVE,
   * DAYS_BEFORE_DELETE, LOGDRIVER_LOGDIR_NAME, merge/filter toggles).
   *
-  * @param rawBlockMerge  compact with [[LogMaintenance.rawMerge]] (raw
-  *                       Avro-block copy — the reference's merge job shape)
-  *                       instead of the decode + re-encode [[LogMaintenance.merge]]
   * @param daysBeforeArchive  filter `data/` → `archive/` once a partition is
   *                           older than this many days; negative = never
   *                           (reference :150-160)
@@ -32,7 +29,6 @@ import org.apache.spark.sql.SparkSession
   */
 final case class MaintenanceConfig(
     doMerge: Boolean = true,
-    rawBlockMerge: Boolean = true,
     daysBeforeArchive: Int = -1,
     daysBeforeDelete: Int = -1,
     filterYaml: Option[String] = None,
@@ -208,12 +204,7 @@ object MaintenanceRunner {
         s"${if (wantMerge) "merge" else ""}${if (wantMerge && wantFilter) "+"
           else ""}${if (wantFilter) "filter" else ""} $comp") {
         if (wantMerge) {
-          if (config.rawBlockMerge)
-            LogMaintenance.rawMerge(spark, comp.toString,
-              config.targetFileSize)
-          else
-            LogMaintenance.merge(spark, comp.toString,
-              config.targetFileSize)
+          LogMaintenance.rawMerge(spark, comp.toString, config.targetFileSize)
           merged.synchronized { merged += comp.toString }
         }
         if (wantFilter && fs.exists(data)) {

@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, LinkOption, Paths}
 
 import scala.io.Source
 import scala.util.Using
@@ -18,23 +18,34 @@ class GoldenQuerySpec extends SparkTestBase {
   private val startMs = 1330423200000L // Feb 28, 2012 10:00 UTC
   private val endMs = 1330426800000L   // Feb 28, 2012 11:00 UTC
 
+  /** `rel` under [[refBase]]. Every test here replays the reference's
+    * files, so when that directory is absent the test fails naming it.
+    */
+  private def ref(rel: String): String = {
+    if (!Files.isDirectory(Paths.get(refBase)))
+      fail(s"the reference test fixture $refBase is absent: " +
+        "GoldenQuerySpec replays its Boom tree and golden files")
+    s"$refBase/$rel"
+  }
+
   /** The fixture tree lacks the /service/<dc> prefix the catalog expects
     * (the reference's test script uploads it to /service/99/...); recreate
     * that layout with a symlink under target/.
     */
   private lazy val fixtureRoot: String = {
+    val target = Paths.get(ref("logsearch-testservice"))
     val root = Paths.get("target/golden-fixture").toAbsolutePath
     val dcDir = root.resolve("service/99")
     Files.createDirectories(dcDir)
     val link = dcDir.resolve("logsearch-testservice")
-    if (!Files.exists(link)) {
-      Files.createSymbolicLink(link, Paths.get(s"$refBase/logsearch-testservice"))
+    if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS)) {
+      Files.createSymbolicLink(link, target)
     }
     root.toString
   }
 
   private def golden(name: String): Seq[String] =
-    Using.resource(Source.fromFile(s"$refBase/reference-files/$name")("UTF-8"))(_.getLines().toSeq)
+    Using.resource(Source.fromFile(ref(s"reference-files/$name"))("UTF-8"))(_.getLines().toSeq)
 
   private def run(p: LogPredicate): Seq[String] =
     LogQuery(root = fixtureRoot, dc = "99", service = "logsearch-testservice",
@@ -65,7 +76,7 @@ class GoldenQuerySpec extends SparkTestBase {
   // SQL route for a DSv2 source is a registered view.
   test("SQL over the boom source via temp view") {
     spark.read.format("boom")
-      .load(s"$refBase/logsearch-testservice/logs/20120228/10/logsearch-test/data")
+      .load(ref("logsearch-testservice/logs/20120228/10/logsearch-test/data"))
       .createOrReplaceTempView("logs")
     assert(spark.sql("SELECT count(*) AS n FROM logs").head().getLong(0) === 17)
     assert(spark.sql("SELECT message FROM logs WHERE message LIKE '%fenêtre%'").count() === 1)
@@ -131,11 +142,11 @@ class GoldenQuerySpec extends SparkTestBase {
         ("loggrep", Seq("-regex=αβγδε|человек|fenêtre|ä|رجل"),
           a => Grep(a.regex, a.caseInsensitive)),
         ("logmultisearch",
-          Seq(s"-strings=$refBase/logmultisearch-strings-OR.txt"),
+          Seq(s"-strings=${ref("logmultisearch-strings-OR.txt")}"),
           a => MultiSearch(LogToolCli.loadTerms(a.strings), a.matchAll,
             a.caseInsensitive)),
         ("logmultisearch",
-          Seq(s"-strings=$refBase/logmultisearch-strings-AND.txt", "--a",
+          Seq(s"-strings=${ref("logmultisearch-strings-AND.txt")}", "--a",
             "--i"),
           a => MultiSearch(LogToolCli.loadTerms(a.strings), a.matchAll,
             a.caseInsensitive)))
@@ -173,7 +184,7 @@ class GoldenQuerySpec extends SparkTestBase {
 
   test("logmultisearch golden (OR/AND × case, logsearch.test.script.sh:116-119)") {
     def terms(f: String): Seq[String] =
-      LogPredicate.termsFromText(Files.readString(Paths.get(s"$refBase/$f")))
+      LogPredicate.termsFromText(Files.readString(Paths.get(ref(f))))
     val or = terms("logmultisearch-strings-OR.txt")
     val and = terms("logmultisearch-strings-AND.txt")
     val out =

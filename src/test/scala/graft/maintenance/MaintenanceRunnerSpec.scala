@@ -45,7 +45,7 @@ class MaintenanceRunnerSpec extends SparkTestBase {
 
   private def mkData(comp: String): Unit = {
     dropIncoming(comp)
-    LogMaintenance.merge(spark, comp)
+    LogMaintenance.rawMerge(spark, comp)
   }
 
   // nowMs slack: fixture files are written moments before run(); with
@@ -151,16 +151,6 @@ class MaintenanceRunnerSpec extends SparkTestBase {
     assert(fs.exists(new Path(bad, "incoming/junk-0")))
   }
 
-  test("record-level merge variant is selectable") {
-    val root = Files.createTempDirectory("maintrec").toString
-    val comp = s"$root/99/websvc/logs/${day(0)}/10/web-a"
-    dropIncoming(comp)
-    val r = MaintenanceRunner.run(spark, root, "99", "websvc", "logs",
-      cfg().copy(rawBlockMerge = false))
-    assert(r.ok && r.merged.size === 1)
-    assert(spark.read.format("boom").load(s"$comp/data").count() === 180)
-  }
-
   test("logmaintenance CLI: drives the lifecycle and prints Job Stats") {
     val root = Files.createTempDirectory("maintcli").toString
     val comp = s"$root/99/websvc/logs/${day(0)}/10/web-a"
@@ -177,6 +167,51 @@ class MaintenanceRunnerSpec extends SparkTestBase {
     assert(stats.contains("Job Stats :") && stats.contains("failed=0"),
       stats)
     assert(fs.exists(new Path(comp, "data/_READY")))
+  }
+
+  test("logmaintenance CLI: an unknown argument exits 1 before the lock and touches nothing") {
+    val root = Files.createTempDirectory("maintbad").toString
+    val comp = s"$root/99/websvc/logs/${day(0)}/10/web-a"
+    dropIncoming(comp)
+    def listing(): Seq[(String, Long)] = {
+      val it = fs.listFiles(new Path(root), true)
+      val b = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      while (it.hasNext) { val f = it.next(); b += ((f.getPath.toString, f.getLen)) }
+      b.sorted.toSeq
+    }
+    val before = listing()
+    assert(before.exists(_._1.contains("/incoming/")))
+    val lockDir = Files.createTempDirectory("maintlock-bad").toString
+    val ch = java.nio.channels.FileChannel.open(
+      java.nio.file.Paths.get(lockDir, "logmaintenance.global.lock"),
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.WRITE)
+    for (bad <- Seq("--record-merge", "--days-before-delet=3")) {
+      val argv = Array(s"--root=$root", "-dc=99", "-svc=websvc",
+        "--wait-minutes=0", bad)
+      assert(graft.cli.logmaintenance.runAll(spark, argv) === 1, bad)
+      // Every conf-file line is checked before any service is submitted:
+      // the valid first line must not compact websvc either.
+      val conf = Files.createTempFile("maintbad", ".conf")
+      Files.writeString(conf, s"99 websvc\n99 svc-other $bad\n")
+      assert(graft.cli.logmaintenance.runAll(spark, Array(s"--conf=$conf",
+        s"--root=$root", "--wait-minutes=0")) === 1, bad)
+      // With the lock held elsewhere, run() still reports the argument:
+      // the check comes before the lock (and so before any session).
+      val err = new java.io.ByteArrayOutputStream()
+      val oldErr = System.err
+      val held = ch.lock()
+      val code =
+        try {
+          System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+          graft.cli.logmaintenance.run(argv :+ s"--lock-dir=$lockDir")
+        } finally { System.setErr(oldErr); held.release() }
+      assert(code === 1)
+      assert(err.toString("UTF-8").contains(
+        s";logmaintenance: unrecognized argument: $bad"), err.toString("UTF-8"))
+    }
+    ch.close()
+    assert(listing() === before)
   }
 
   test("logmaintenance CLI: conf file fans out services; global lock excludes") {

@@ -68,15 +68,6 @@ class LogMaintenanceSpec extends SparkTestBase {
     dir
   }
 
-  test("merge compacts incoming into data with _READY marker") {
-    val dir = newPartitionDir()
-    LogMaintenance.merge(spark, dir)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.exists(new Path(dir, "data/_READY")))
-    assert(!fs.exists(new Path(dir, "incoming")))
-    assert(spark.read.format("boom").load(s"$dir/data").count() === 300)
-  }
-
   test("rawMerge compacts by verbatim block copy (M2): rows, metadata, and compressed block bytes survive") {
     val dir = newPartitionDir()
     // Capture each input's compressed block payload sequence BEFORE the
@@ -133,82 +124,6 @@ class LogMaintenanceSpec extends SparkTestBase {
     assert(gotBlocks.sorted === wantBlocks.sorted)
     // One output bin at default target size → one file.
     assert(merged.size === 1)
-  }
-
-  test("merge sizes outputs from measured bytes: ±25% of target across compressibilities") {
-    // Two deflate corpora at opposite compressibility extremes; the sizing
-    // model (Σ input bytes × probed re-encode ratio) must land every output
-    // file within 25% of the compressed-byte target for both.
-    val rnd = new scala.util.Random(42)
-    val randomMsgs = Array.fill(12000)(rnd.alphanumeric.take(80).mkString)
-    val vocab = Array("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-      "request", "served", "warn", "retry", "cache", "hit")
-    val vrnd = new scala.util.Random(7)
-    val vocabMsgs = Array.fill(12000)(
-      (0 until 12).map(_ => vocab(vrnd.nextInt(vocab.length))).mkString(" "))
-    for ((msgs, tag) <- Seq((randomMsgs, "random"), (vocabMsgs, "vocab"))) {
-      val dir = Files.createTempDirectory(s"maint-size-$tag").toString
-      (0 until 3).foreach { d =>
-        // Constant (second, createTime, blockNumber) → full 1000-line runs
-        // on both sides of the merge, so the probe is like-for-like.
-        val lines = (0 until 4000).map(i => LogLine(
-          1700000000000L + i % 1000, msgs(d * 4000 + i), 0,
-          1700000000000L, 0L, 1L))
-        Ingest.write(lines.toDF().coalesce(1), s"$dir/incoming/u-$d")
-      }
-      val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-      val inBytes = fs.getContentSummary(new Path(dir, "incoming")).getLength
-      val target = inBytes / 4
-      LogMaintenance.merge(spark, dir, targetFileSize = target)
-      val outs = fs.listStatus(new Path(dir, "data"))
-        .filter(_.getPath.getName.endsWith(".bm"))
-      assert(outs.length === 4, s"$tag: expected 4 output files")
-      outs.foreach { o =>
-        val dev = math.abs(o.getLen - target).toDouble / target
-        assert(dev <= 0.25, f"$tag: ${o.getPath.getName} ${o.getLen} vs " +
-          f"target $target (${dev * 100}%.0f%% off)")
-      }
-      assert(spark.read.format("boom").load(s"$dir/data").count() === 12000)
-    }
-
-    // A null-codec container of compressible content: raw input bytes
-    // overstate output ~40×; the probe must keep the merge from splitting
-    // into far-undersized files (the old ×-constant guess would make 3).
-    val dir = Files.createTempDirectory("maint-size-null").toString
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    locally {
-      import org.apache.avro.file.DataFileWriter
-      import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-      val schema = graft.boom.BoomSchemas.logBlockSchema
-      val lineSchema = graft.boom.BoomSchemas.messageWithMillisSchema
-      val w = new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](schema)) // no codec → null
-      val p = new Path(dir, "incoming/null/a.bm")
-      fs.mkdirs(p.getParent)
-      w.create(schema, fs.create(p, true))
-      (0 until 40).foreach { b =>
-        val blk = new GenericData.Record(schema)
-        blk.put("second", 1700000100L); blk.put("createTime", 1700000100000L)
-        blk.put("blockNumber", b.toLong)
-        val lines = (0 until 100).map { i =>
-          val line = new GenericData.Record(lineSchema)
-          line.put("ms", i.toLong); line.put("eventId", 0)
-          line.put("message", "the quick brown fox jumps over the lazy dog")
-          line
-        }
-        blk.put("logLines", java.util.Arrays.asList(lines: _*))
-        w.append(blk)
-      }
-      w.close()
-    }
-    val nullBytes = fs.getContentSummary(new Path(dir, "incoming")).getLength
-    LogMaintenance.merge(spark, dir, targetFileSize = nullBytes / 3)
-    val outs = fs.listStatus(new Path(dir, "data"))
-      .filter(_.getPath.getName.endsWith(".bm"))
-    assert(outs.length === 1,
-      s"probe should collapse compressible null-codec input to one file, " +
-        s"got ${outs.length}")
-    assert(spark.read.format("boom").load(s"$dir/data").count() === 4000)
   }
 
   test("rawMerge: multi-bin packing promotes every bin and splits at the size target") {
@@ -293,7 +208,7 @@ class LogMaintenanceSpec extends SparkTestBase {
 
   test("filterArchive keeps only matching lines") {
     val dir = newPartitionDir()
-    LogMaintenance.merge(spark, dir)
+    LogMaintenance.rawMerge(spark, dir)
     val yaml =
       """filters:
         |  - ".*":
@@ -309,7 +224,7 @@ class LogMaintenanceSpec extends SparkTestBase {
 
   test("keepall fast-path renames without rewrite; dropall deletes") {
     val keep = newPartitionDir()
-    LogMaintenance.merge(spark, keep)
+    LogMaintenance.rawMerge(spark, keep)
     val fs = new Path(keep).getFileSystem(spark.sessionState.newHadoopConf())
     val dataFiles = fs.listStatus(new Path(keep, "data"))
       .map(_.getPath.getName).filterNot(_.startsWith("_")).toSet
@@ -319,7 +234,7 @@ class LogMaintenanceSpec extends SparkTestBase {
     assert(archiveFiles === dataFiles) // byte-identical rename, same names
 
     val drop = newPartitionDir()
-    LogMaintenance.merge(spark, drop)
+    LogMaintenance.rawMerge(spark, drop)
     LogMaintenance.filterArchive(spark, drop, "c",
       "filters:\n  - \".*\":\n    - { type: dropall }\n")
     assert(!fs.exists(new Path(drop, "data")))
@@ -341,7 +256,7 @@ class LogMaintenanceSpec extends SparkTestBase {
       nowMs = System.currentTimeMillis() + 25L * 3600 * 1000)
     assert(fs.exists(new Path(dir, "incoming")))
     assert(!fs.exists(new Path(dir, "working/dead-run")))
-    LogMaintenance.merge(spark, dir)
+    LogMaintenance.rawMerge(spark, dir)
     assert(spark.read.format("boom").load(s"$dir/data").count() === 300)
   }
 
