@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * stdout AND to bench_result.json (override with SPARK_GRAFT_BENCH_JSON) so
   * harnesses don't have to fish it out of build-tool log prefixes.
   *
+  * Build-once fixtures (scan handles, persisted indexes, written fixture
+  * trees) are memoized per session in `SparkEntry`, so the warmup run
+  * builds them and every timed rep measures only the query's scan path.
+  *
   * Measurement protocol (contention-hardened):
   *  - Reps are INTERLEAVED round-robin across queries (sweep 1 runs every
   *    query once, then sweep 2, ...) instead of back-to-back per query. A

@@ -15,17 +15,18 @@ object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Explain <sfDir> <outDir> <tag> [query ...]")
     val Array(sfDir, outDir, tag) = args.take(3)
+    val queries = SparkEntry.queries
     val names =
       if (args.length > 3) args.drop(3).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
+      else queries.keys.toSeq.sorted
+    val unknown = names.filterNot(queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Tuning.session(sfDir)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val out = Paths.get(s"$outDir/${name}_$tag.txt")
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val df = queries(name)(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(out, plan)

@@ -29,7 +29,8 @@ object Profile {
     require(args.length >= 2, "usage: Profile <sfDir> <query> [query ...]")
     val sfDir = args.head
     val names = args.tail.toSeq
-    val unknown = names.filterNot(SparkEntry.queries.contains)
+    val queries = SparkEntry.queries
+    val unknown = names.filterNot(queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Tuning.session(sfDir)
     // Absorb the session's one-time costs (codegen compiler, JIT), so rep 1
@@ -38,7 +39,7 @@ object Profile {
     val profiler = new Profiler(spark)
     try names.foreach { name =>
       (1 to 2).foreach { rep =>
-        try println(profiler.record(name, rep)(SparkEntry.queries(name)(spark, sfDir)))
+        try println(profiler.record(name, rep)(queries(name)(spark, sfDir)))
         catch { case e: Exception => System.err.println(s"[profile] $name rep$rep: $e") }
       }
     } finally profiler.close()

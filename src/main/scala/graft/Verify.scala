@@ -10,13 +10,6 @@ object Verify {
     val only: Option[Set[String]] = if (args.length > 2) Some(args.drop(2).toSet) else None
     val spark = Tuning.session(sfDir)
     new java.io.File(outDir).mkdirs()
-    // Belt to PlanInvariantsSpec's keyset-parity suspenders: a dumped
-    // query with no oracle entry becomes an `err` row in the driver's
-    // correctness report — shout it here too, where local iteration sees
-    // it immediately.
-    (SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet).toSeq.sorted
-      .foreach(n => System.err.println(
-        s"[verify] WARNING: $n is registered in queries but has NO oracleSql entry"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -40,7 +33,8 @@ object Verify {
     // skipped (set SPARK_GRAFT_FORCE=1 to redo), so a re-run after a
     // timeout continues where the killed run stopped.
     val force = sys.env.get("SPARK_GRAFT_FORCE").contains("1")
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val queries = SparkEntry.queries
+    val names = queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val t0 = System.nanoTime()
     names.foreach { name =>
@@ -49,7 +43,7 @@ object Verify {
       else {
         val tq = System.nanoTime()
         try {
-          SparkEntry.queries(name)(spark, sfDir).coalesce(1)
+          queries(name)(spark, sfDir).coalesce(1)
             .write.mode("overwrite").parquet(s"$outDir/$name")
           System.err.println(f"[verify] $name: ${(System.nanoTime() - tq) / 1e9}%.1fs" +
             f" (total ${(System.nanoTime() - t0) / 1e9}%.0fs)")

@@ -26,9 +26,15 @@ import org.apache.spark.util.SerializableConfiguration
   *     blockNumber increments per roll — the text→Boom ingest path
   *     (pig/TextToBoomConverter.java:94-103).
   *
-  * Rows should arrive grouped by block key within each partition (the engine
-  * sorts by the canonical key before writing); an unsorted stream is still
-  * correct but produces more, smaller blocks.
+  * A block closes whenever the (second, createTime, blockNumber) key of the
+  * next row differs, so rows should arrive grouped by that key within each
+  * partition: `Ingest.write` sorts by timestamp (ingest mode mints the key
+  * from that order), and `Ingest.reboom` sorts by the key itself and then
+  * lineNumber. An unsorted stream is still correct but produces more,
+  * smaller blocks.
+  *
+  * Option `hourlySuffix`, when present, selects [[BoomHourlyDataWriter]]:
+  * output rolls into `<dir>/<yyyyMMdd>/<hh>/<hourlySuffix>/`.
   *
   * Commit protocol (two-phase, retry- and speculative-attempt-safe): every
   * writer streams to `<name>.bm.tmp` and task commit only REPORTS the staged
@@ -54,9 +60,8 @@ class BoomWriteBuilder(paths: Seq[String], info: LogicalWriteInfo)
     override def toBatch: BatchWrite = {
       val spark = SparkSession.active
       val mode = info.options().getOrDefault("boomMode", "reboom")
-      val hourlyDirs = info.options().getBoolean("hourlyDirs", false)
-      val hourlySuffix = info.options().getOrDefault("hourlySuffix", "")
-      new BoomBatchWrite(paths.head, mode, hourlyDirs, hourlySuffix, doTruncate,
+      val hourlySuffix = Option(info.options().get("hourlySuffix"))
+      new BoomBatchWrite(paths.head, mode, hourlySuffix, doTruncate,
         spark.sessionState.newHadoopConf())
     }
   }
@@ -65,8 +70,7 @@ class BoomWriteBuilder(paths: Seq[String], info: LogicalWriteInfo)
 class BoomBatchWrite(
     path: String,
     mode: String,
-    hourlyDirs: Boolean,
-    hourlySuffix: String,
+    hourlySuffix: Option[String],
     truncate: Boolean,
     hconf: Configuration) extends BatchWrite {
 
@@ -80,7 +84,7 @@ class BoomBatchWrite(
       fs.listStatus(dir).foreach(s => fs.delete(s.getPath, true))
     }
     fs.mkdirs(dir)
-    new BoomWriterFactory(path, mode, hourlyDirs, hourlySuffix,
+    new BoomWriterFactory(path, mode, hourlySuffix,
       SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hconf)))
   }
 
@@ -126,13 +130,15 @@ case class BoomCommitMessage(staged: Seq[(String, String)], rows: Long)
   extends WriterCommitMessage
 
 class BoomWriterFactory(
-    path: String, mode: String, hourlyDirs: Boolean, hourlySuffix: String,
+    path: String, mode: String, hourlySuffix: Option[String],
     hconf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val conf = hconf.value.value
-    if (hourlyDirs) new BoomHourlyDataWriter(path, mode, hourlySuffix, partitionId, taskId, conf)
-    else new BoomDataWriter(path, mode, partitionId, taskId, conf)
+    hourlySuffix match {
+      case Some(suffix) => new BoomHourlyDataWriter(path, mode, suffix, partitionId, taskId, conf)
+      case None => new BoomDataWriter(path, mode, partitionId, taskId, conf)
+    }
   }
 }
 

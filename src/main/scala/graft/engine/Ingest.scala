@@ -2,7 +2,8 @@ package graft.engine
 
 import graft.core.{LogLine, TimestampParser, TimestampParsers}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, floor}
 
 /** Text → Boom ingest: the Spark-native equivalent of the reference's
   * `convert2bm.pg` pipeline (pig/TextToBoomConverter.java).
@@ -61,16 +62,27 @@ object Ingest {
 
   /** Write LogLine rows as Boom files (ingest mode — metadata minted). */
   def write(df: DataFrame, outputDir: String, mode: SaveMode = SaveMode.Append): Unit =
-    df.select("timestamp", "message", "eventId", "createTime", "blockNumber", "lineNumber")
+    ingestWriter(df).mode(mode).save(outputDir)
+
+  /** The one ingest write: LogLine columns, sorted by timestamp within each
+    * partition, written in `ingest` mode, which mints the block metadata.
+    */
+  private def ingestWriter(df: DataFrame): DataFrameWriter[Row] =
+    df.select(LogLine.schema.fieldNames.map(col): _*)
       .sortWithinPartitions("timestamp")
-      .write.format("boom").option("boomMode", "ingest").mode(mode).save(outputDir)
+      .write.format("boom").option("boomMode", "ingest")
 
   /** Rewrite existing log lines preserving block metadata (ReBoom — the
-    * filter/archive path, boom/ReBoomWriter.java:71-90).
+    * filter/archive path, boom/ReBoomWriter.java:71-90). Rows are sorted by
+    * the writer's block key (second, createTime, blockNumber) and then
+    * lineNumber, so each surviving source block is written back as one
+    * block, in its own line order, even when the blocks of several uploads
+    * interleave in time.
     */
   def reboom(df: DataFrame, outputDir: String, mode: SaveMode = SaveMode.Append): Unit =
-    df.select("timestamp", "message", "eventId", "createTime", "blockNumber", "lineNumber")
-      .sortWithinPartitions("timestamp", "createTime", "blockNumber", "lineNumber")
+    df.select(LogLine.schema.fieldNames.map(col): _*)
+      .sortWithinPartitions(floor(col("timestamp") / 1000), col("createTime"),
+        col("blockNumber"), col("lineNumber"))
       .write.format("boom").option("boomMode", "reboom").mode(mode).save(outputDir)
 
   /** Materialize Boom logs as hour-partitioned Parquet — the analytics hand-
@@ -139,7 +151,7 @@ object Ingest {
     * the query tools expect them:
     * `<root>/service/<dc>/<service>/logs/<yyyyMMdd>/<hh>/<component>/incoming/<runId>/part-*.bm`
     *
-    * The hourly roll happens inside the boom writer (option `hourlyDirs`,
+    * The hourly roll happens inside the boom writer (option `hourlySuffix`,
     * the PigBoomHourlyRecordWriter analogue) — one narrow write pass, no
     * per-hour driver loop, no extra shuffle beyond the within-partition sort.
     */
@@ -152,14 +164,7 @@ object Ingest {
       component: String,
       parserName: Option[String] = None,
       runId: String = java.util.UUID.randomUUID().toString.take(8)): Unit = {
-    import spark.implicits._
-    val parsed = parse(spark.read.textFile(inputPath), parserName)
-    parsed.toDF()
-      .select("timestamp", "message", "eventId", "createTime", "blockNumber", "lineNumber")
-      .sortWithinPartitions("timestamp")
-      .write.format("boom")
-      .option("boomMode", "ingest")
-      .option("hourlyDirs", "true")
+    ingestWriter(parse(spark.read.textFile(inputPath), parserName).toDF())
       .option("hourlySuffix", s"$component/incoming/$runId")
       .mode(SaveMode.Append)
       .save(s"$root/service/$dc/$service/logs")

@@ -73,9 +73,11 @@ final case class MaintenanceReport(
   *       {incoming/, data/, archive/, working/} }}}
   *
   * Differences from the reference, by design:
-  *   - No ZooKeeper locks: every job stages via `working/<id>/` + atomic
-  *     renames (see [[LogMaintenance]]), so concurrent readers never observe
-  *     partial state; the single-RUN guard lives in the CLI (lock file).
+  *   - No ZooKeeper locks: every job stages via `working/<id>/` and
+  *     promotes each file with a rename, so no reader sees a half-written
+  *     file; a query that lists a partition while a job moves its lines
+  *     can still read them twice or not at all (see [[LogMaintenance]]).
+  *     The single-RUN guard lives in the CLI (lock file).
   *   - Two phases instead of one DFS: phase 1 enqueues per-partition Spark
   *     jobs (bounded pool — the reference's JobRunner), phase 2 walks
   *     bottom-up for cleanup + `_READY` propagation, so one pass converges

@@ -37,15 +37,14 @@ class PlanInvariantsSpec extends SparkTestBase {
     assert(bad.isEmpty, s"plan invariants violated:\n${bad.mkString("\n")}")
   }
 
-  // Round-11 shipped two queries whose doc comments CLAIMED oracles that
-  // were never written — the driver's correctness sweep reports such rows
-  // as `err`, and nothing in-repo caught the drift. This makes the
-  // contract structural: every registered query has an oracle, and no
-  // oracle is orphaned from a query.
-  test("queries and oracleSql register exactly the same keys") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries with NO oracleSql entry: ${(q -- o).toSeq.sorted.mkString(", ")}")
-    assert((o -- q).isEmpty, s"oracleSql entries with NO query: ${(o -- q).toSeq.sorted.mkString(", ")}")
+  // `queries` and `oracleSql` are derived from `cases`, so no query can
+  // lack its oracle; a repeated name, though, would silently drop a case
+  // from both maps.
+  test("every QueryCase name is registered once") {
+    val repeated = SparkEntry.cases.groupBy(_.name).collect {
+      case (name, cs) if cs.size > 1 => name
+    }
+    assert(repeated.isEmpty,
+      s"names registered more than once: ${repeated.toSeq.sorted.mkString(", ")}")
   }
 }

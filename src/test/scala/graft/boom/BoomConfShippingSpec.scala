@@ -53,7 +53,7 @@ class BoomConfShippingSpec extends SparkTestBase {
       .toMicroBatchStream(Files.createTempDirectory("boom-ckpt").toString)
       .createReaderFactory()
     val write = new BoomBatchWrite(Files.createTempDirectory("boom-w").toString, "ingest",
-      true, "", false, spark.sessionState.newHadoopConf())
+      Some(""), false, spark.sessionState.newHadoopConf())
       .createBatchWriterFactory(new PhysicalWriteInfo { def numPartitions(): Int = 1 })
     Seq("batch scan" -> batch.head, "streaming scan" -> stream, "write" -> write).foreach {
       case (what, factory) =>

@@ -219,7 +219,7 @@ class BoomRoundTripSpec extends SparkTestBase {
     assert(ls(dir, ".bm").isEmpty)
     assert(ls(dir, ".bm.tmp").size === 2)
     // Job commit promotes every staged file.
-    new BoomBatchWrite(dir, "ingest", true, "", false, hconf).commit(Array(msg))
+    new BoomBatchWrite(dir, "ingest", Some(""), false, hconf).commit(Array(msg))
     assert(ls(dir, ".bm").size === 2)
     assert(ls(dir, ".bm.tmp").isEmpty)
 

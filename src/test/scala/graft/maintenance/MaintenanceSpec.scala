@@ -222,6 +222,43 @@ class LogMaintenanceSpec extends SparkTestBase {
     assert(archived.where(!col("message").contains("ERROR")).count() === 0)
   }
 
+  test("filterArchive writes each kept block back whole when uploads interleave in time") {
+    import org.apache.avro.file.DataFileReader
+    import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("maint-interleave").toString
+    val t0 = 1699999200000L // 2023-11-14T22:00:00Z
+    val fmt = java.time.format.DateTimeFormatter.ISO_INSTANT
+    // Three uploads of one hour whose lines alternate millisecond by
+    // millisecond: each upload's blocks hold 200 lines of one second.
+    (0 until 3).foreach { d =>
+      val text = Files.createTempFile("interleave", ".log")
+      val lines = (0 until 2000).map { i =>
+        s"${fmt.format(java.time.Instant.ofEpochMilli(t0 + i * 5L + d))} d$d line $i"
+      }
+      Files.write(text, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      Ingest.textToCatalog(spark, text.toString, root, "1", "svc", "comp", runId = s"up$d")
+    }
+    val part = s"$root/service/1/svc/logs/20231114/22/comp"
+    LogMaintenance.rawMerge(spark, part)
+    def blocks(sub: String): Long = {
+      val files = Files.walk(java.nio.file.Paths.get(part, sub))
+      try files.iterator().asScala.filter(_.toString.endsWith(".bm")).map { p =>
+        val r = new DataFileReader[GenericRecord](p.toFile, new GenericDatumReader[GenericRecord]())
+        try r.iterator().asScala.size.toLong finally r.close()
+      }.sum finally files.close()
+    }
+    def rows(sub: String): Seq[String] =
+      spark.read.format("boom").load(s"$part/$sub").collect().map(_.toString).sorted.toSeq
+    val dataBlocks = blocks("data")
+    val dataRows = rows("data")
+    assert(dataBlocks === 30)
+    LogMaintenance.filterArchive(spark, part, "comp",
+      "filters:\n  - \".*\":\n    - { type: regex, pattern: \"line\" }\n")
+    assert(blocks("archive") === dataBlocks)
+    assert(rows("archive") === dataRows)
+  }
+
   test("keepall fast-path renames without rewrite; dropall deletes") {
     val keep = newPartitionDir()
     LogMaintenance.rawMerge(spark, keep)
